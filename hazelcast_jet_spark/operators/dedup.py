@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hazelcast_jet_spark.operators.graph_local import (bounded_arrow,
+                                                       min_root_components)
 from hazelcast_jet_spark.operators.text import normalize_text
 from hazelcast_jet_spark.session import ensure_parallelism
 
@@ -917,10 +919,11 @@ def cut_duplicated_spans(
     )
 
 
-#: directed-edge count under which pairs_to_groups solves the
-#: components on the driver (bounded collect, ~16 B/row) instead of the
-#: distributed label loop; 0 disables the small path.  Parameterized for
-#: deployments where driver memory is tighter than the default.
+#: pair (edge row) count up to which pairs_to_groups and graph.wcc solve
+#: the components on the driver (one bounded Arrow collect, ~16 B/row)
+#: instead of the distributed loop; 0 disables the small path.
+#: Parameterized for deployments where driver memory is tighter than the
+#: default.
 _PAIRS_COLLECT_THRESHOLD = int(
     os.environ.get("SPARK_GRAFT_CC_COLLECT_THRESHOLD", "200000"))
 
@@ -946,14 +949,6 @@ def pairs_to_groups(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     (the contaminated minority), never the corpus.
     """
     e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    # materialize the edge list ONCE: every round joins against it, and
-    # without the checkpoint each round would re-execute the (potentially
-    # expensive) upstream pair-generation plan — an LSH candidate join —
-    # from scratch.  The edge list is two longs per pair, tiny vs the
-    # corpus that produced it.
-    edges = e.union(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
     # Size-adaptive execution (the broadcast-join analog, r12
     # optimization round): the iterated frame is only the nodes that
     # appear in PAIRS — at any corpus scale the near-dup pair set is the
@@ -962,40 +957,28 @@ def pairs_to_groups(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     # synchronized job latency than one bounded collect.  Union-find
     # with min-root tracking returns the IDENTICAL (node, min reachable
     # id) labeling (pytest-pinned equal to the distributed loop); above
-    # the threshold — or when the caller disables it — the O(log d)
-    # distributed iteration below is unchanged.  Bound: the collect is
-    # ≤ 2·threshold (src, dst) rows (~16 B each, ≤ ~6 MB driver).
-    n_dir_edges = edges.count()  # cached-scan scalar off the checkpoint
-    if (_PAIRS_COLLECT_THRESHOLD > 0
-            and n_dir_edges <= 2 * _PAIRS_COLLECT_THRESHOLD):
-        node_type = edges.schema["src"].dataType
-        parent: dict = {}
-
-        def _find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:  # path compression
-                parent[x], x = r, parent[x]
-            return r
-
-        for row in edges.collect():
-            a, b = row[0], row[1]
-            if a not in parent:
-                parent[a] = a
-            if b not in parent:
-                parent[b] = b
-            ra, rb = _find(a), _find(b)
-            if ra != rb:
-                # min root wins, so every root IS the component minimum
-                if rb < ra:
-                    ra, rb = rb, ra
-                parent[rb] = ra
-        out_rows = [(n, _find(n)) for n in parent]
+    # the threshold, with NULL ids, or when the caller disables it, the
+    # O(log d) distributed iteration below is unchanged.  Bound: the
+    # probe is ONE job collecting ≤ threshold+1 pairs (the directed edge
+    # list below is twice that, so this is the 2·threshold directed-edge
+    # bound), taken BEFORE anything is checkpointed.
+    tbl = bounded_arrow(e, _PAIRS_COLLECT_THRESHOLD)
+    if tbl is not None and not (tbl.column("src").null_count
+                                or tbl.column("dst").null_count):
+        node_type = e.schema["src"].dataType
+        nodes, roots = min_root_components(tbl)
         return pairs.sparkSession.createDataFrame(
-            out_rows, T.StructType([
-                T.StructField("node", node_type),
-                T.StructField("group", node_type)]))
+            pd.DataFrame({"node": nodes, "group": roots}),
+            T.StructType([T.StructField("node", node_type),
+                          T.StructField("group", node_type)]))
+    # materialize the edge list ONCE: every round joins against it, and
+    # without the checkpoint each round would re-execute the (potentially
+    # expensive) upstream pair-generation plan — an LSH candidate join —
+    # from scratch.  The edge list is two longs per pair, tiny vs the
+    # corpus that produced it.
+    edges = e.union(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).localCheckpoint(eager=True)
     labels = (
         edges.select(F.col("src").alias("node")).distinct()
         .withColumn("label", F.col("node"))

@@ -262,16 +262,16 @@ def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
         raise ValueError("iters must be >= 1")
     if not 0.0 < damping < 1.0:
         raise ValueError("damping must be in (0, 1)")
-    edges = edges.localCheckpoint()  # one materialization feeds both directions
     # Size-adaptive small path (guide §1.2 #1; the wcc/pairs_to_groups
     # r12 precedent): below the bounded threshold the per-round
     # checkpoint + aggregate jobs cost more in driver-synchronized
     # scheduling than ONE bounded collect + an exact in-driver replay
     # of the identical round body (operators/graph_local.py — same
     # DECIMAL(28,18) quantization, same IEEE op order; the final
-    # decimal round stays in Spark).  Skipped when ``rounds_out`` is
-    # given — that requests the distributed iteration contract the
-    # fixpoint tests pin round counts against.
+    # decimal round stays in Spark).  The bounded probe is the only job;
+    # the edges are checkpointed only once it declines.  Skipped when
+    # ``rounds_out`` is given — that requests the distributed iteration
+    # contract the fixpoint tests pin round counts against.
     if rounds_out is None:
         from hazelcast_jet_spark.operators import graph_local
 
@@ -283,7 +283,6 @@ def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
                 tol=(tol if tol is not None
                      else 0.5 * 10.0 ** (-round_digits)),
                 max_rounds=max_rounds)
-            edges.unpersist(False)
             import pandas as pd
 
             out = edges.sparkSession.createDataFrame(
@@ -291,6 +290,7 @@ def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
                 "node bigint, rank double")
             return out.select(
                 "node", F.round("rank", round_digits).alias("pagerank"))
+    edges = edges.localCheckpoint()  # one materialization feeds both directions
     # hash-partitioned by dst: each round's contribution aggregate is
     # keyed on dst, so the persisted partitioning serves every
     # iteration (guide §2.4 — one exchange for the whole loop); the
@@ -415,9 +415,9 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
         raise ValueError("iters must be >= 1")
     if not 0.0 < damping < 1.0:
         raise ValueError("damping must be in (0, 1)")
-    edges = edges.localCheckpoint()
     # bounded small path — the pagerank discipline (same round body
-    # with the seed-restricted base term; graph_local.pagerank_local)
+    # with the seed-restricted base term; graph_local.pagerank_local);
+    # the seed collect is bounded by the same probe as the edges
     from hazelcast_jet_spark.operators import graph_local
 
     arrs = graph_local.collect_int_edges(edges)
@@ -425,18 +425,20 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
         import numpy as np
         import pandas as pd
 
-        seed_pd = seeds.select("node").toPandas()["node"]
-        if seed_pd.dtype == np.int64:  # no NULL seeds
-            seed_ids = np.unique(seed_pd.to_numpy(np.int64))
+        seed_tbl = graph_local.bounded_arrow(
+            seeds.select("node"), graph_local.GRAPH_COLLECT_THRESHOLD)
+        seed_col = None if seed_tbl is None else seed_tbl.column("node")
+        if seed_col is not None and not seed_col.null_count:
+            seed_ids = np.unique(seed_col.to_numpy())
             nodes_np, ranks_np, _ = graph_local.pagerank_local(
                 *arrs, iters=iters, damping=damping, seeds=seed_ids)
-            edges.unpersist(False)
             out = edges.sparkSession.createDataFrame(
                 pd.DataFrame({"node": nodes_np, "rank": ranks_np}),
                 "node bigint, rank double")
             return out.select(
                 "node", (F.round("rank", round_digits) + F.lit(0.0))
                 .alias("pagerank"))
+    edges = edges.localCheckpoint()
     # hash(dst) partitioning reused by every round's contribution
     # aggregate and by the symmetric degree init — see pagerank
     directed = (
@@ -716,24 +718,23 @@ def kcore_peel(edges: DataFrame, k: int, iters: int = 4,
         raise ValueError(f"k must be >= 1, got {k}")
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    e = edges.select("src", "dst").localCheckpoint(eager=True)
     # bounded small path: the peel is integer-only (degrees + survivor
     # filters), so the in-driver replay is exact by construction;
     # skipped when ``rounds_out`` requests the distributed contract
     if rounds_out is None:
         from hazelcast_jet_spark.operators import graph_local
 
-        arrs = graph_local.collect_int_edges(e)
+        arrs = graph_local.collect_int_edges(edges)
         if arrs is not None:
             import pandas as pd
 
             nodes_np, deg_np, _ = graph_local.kcore_local(
                 *arrs, k=k, iters=iters, until_fixpoint=until_fixpoint,
                 max_rounds=max_rounds)
-            e.unpersist(False)
             return edges.sparkSession.createDataFrame(
                 pd.DataFrame({"node": nodes_np, "degree": deg_np}),
                 "node bigint, degree bigint")
+    e = edges.select("src", "dst").localCheckpoint(eager=True)
 
     def _round(cur: DataFrame) -> DataFrame:
         # materialize the (tiny) survivor set ONCE per round: the two
@@ -819,19 +820,16 @@ def hindex_coreness(edges: DataFrame, iters: int = 3,
     if rounds_out is None:
         from hazelcast_jet_spark.operators import graph_local
 
-        e0 = edges.select("src", "dst").localCheckpoint()
-        arrs = graph_local.collect_int_edges(e0)
+        arrs = graph_local.collect_int_edges(edges)
         if arrs is not None:
             import pandas as pd
 
             nodes_np, core_np, _ = graph_local.hindex_local(
                 *arrs, iters=iters, until_fixpoint=until_fixpoint,
                 max_rounds=max_rounds)
-            e0.unpersist(False)
             return edges.sparkSession.createDataFrame(
                 pd.DataFrame({"node": nodes_np, "coreness": core_np}),
                 "node bigint, coreness bigint")
-        edges = e0  # reuse the materialization below
     # hash-partitioned by src before the checkpoint: the per-round
     # window (partitionBy src), the h-index aggregate (groupBy src) and
     # the degree init all reuse it — one exchange for the whole loop
@@ -935,19 +933,16 @@ def label_propagation(edges: DataFrame, iters: int = 2,
     if rounds_out is None:
         from hazelcast_jet_spark.operators import graph_local
 
-        e0 = edges.select("src", "dst").localCheckpoint()
-        arrs = graph_local.collect_int_edges(e0)
+        arrs = graph_local.collect_int_edges(edges)
         if arrs is not None:
             import pandas as pd
 
             nodes_np, labels_np, _ = graph_local.lpa_local(
                 *arrs, iters=iters, until_fixpoint=until_fixpoint,
                 max_rounds=max_rounds)
-            e0.unpersist(False)
             return edges.sparkSession.createDataFrame(
                 pd.DataFrame({"node": nodes_np, "label": labels_np}),
                 "node bigint, label bigint")
-        edges = e0  # reuse the materialization below
     both = edges.select("src", "dst").unionAll(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).repartition(F.col("src")).localCheckpoint()
@@ -1038,44 +1033,36 @@ def wcc(edges: DataFrame, max_rounds: int = 50,
     e0 = (edges.select(F.col("src").cast("long").alias("src"),
                        F.col("dst").cast("long").alias("dst"))
           .filter(F.col("src") != F.col("dst")))
+    # Size-adaptive small path (the pairs_to_groups discipline, r12
+    # optimization round): below the threshold the star-contraction loop
+    # costs more in driver-synchronized jobs (2 keyed passes + probe per
+    # round) than one bounded Arrow collect + union-find, which returns
+    # the IDENTICAL reachable-minimum labeling.  The probe reads the
+    # edge rows as they come (union-find needs neither orientation nor
+    # dedup), so it is ONE job with no shuffle, and the threshold bounds
+    # those rows; the cast + self-loop filter leave no NULL endpoints.
+    # The result goes back as pandas, so the sink reads it in the JVM.
+    # Skipped when the caller asks for ``rounds_out`` — that is a request
+    # for the distributed contraction contract (tests pin its round
+    # counts).
+    if rounds_out is None:
+        from hazelcast_jet_spark.operators import graph_local
+        from hazelcast_jet_spark.operators.dedup import (
+            _PAIRS_COLLECT_THRESHOLD)
+
+        tbl = graph_local.bounded_arrow(e0, _PAIRS_COLLECT_THRESHOLD)
+        if tbl is not None:
+            import pandas as pd
+
+            nodes_l, comps_l = graph_local.min_root_components(tbl)
+            return edges.sparkSession.createDataFrame(
+                pd.DataFrame({"node": nodes_l, "component": comps_l},
+                             dtype="int64"),
+                "node long, component long")
     # canonical child>parent orientation; dedup before iterating
     e = (e0.select(F.greatest("src", "dst").alias("src"),
                    F.least("src", "dst").alias("dst"))
          .dropDuplicates(["src", "dst"]).localCheckpoint())
-    # Size-adaptive small path (the pairs_to_groups discipline, r12
-    # optimization round): below the threshold the star-contraction loop
-    # costs more in driver-synchronized jobs (2 keyed passes + probe per
-    # round) than one bounded collect + union-find, which returns the
-    # IDENTICAL reachable-minimum labeling.  Skipped when the caller
-    # asks for ``rounds_out`` — that is a request for the distributed
-    # contraction contract (tests pin its round counts).
-    from hazelcast_jet_spark.operators.dedup import _PAIRS_COLLECT_THRESHOLD
-    n_edges = e.count()  # cached-scan scalar off the checkpoint
-    if (rounds_out is None and _PAIRS_COLLECT_THRESHOLD > 0
-            and n_edges <= _PAIRS_COLLECT_THRESHOLD):
-        parent: dict = {}
-
-        def _find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:
-                parent[x], x = r, parent[x]
-            return r
-
-        for row in e.collect():  # bounded: ≤ threshold (src, dst) longs
-            a, b = row[0], row[1]
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = _find(a), _find(b)
-            if ra != rb:
-                if rb < ra:
-                    ra, rb = rb, ra
-                parent[rb] = ra
-        e.unpersist(False)
-        return edges.sparkSession.createDataFrame(
-            [(n, _find(n)) for n in parent],
-            "node long, component long")
     # node set off the CHECKPOINTED canonical edges (canonicalization
     # preserves the node set), so the upstream edge derivation is not
     # re-executed a second time for the node table
@@ -1108,7 +1095,7 @@ def wcc(edges: DataFrame, max_rounds: int = 50,
                 .dropDuplicates(["src", "dst"]))
 
     rounds = 0
-    prev_n = e.count()  # cached-scan scalar: e is checkpointed
+    prev_n = e.count()  # the one edge count: a cached-scan scalar
     while True:
         if rounds >= max_rounds:
             raise RuntimeError(
@@ -1170,28 +1157,27 @@ def khop_reach(edges: DataFrame, max_degree: int = 256,
              .distinct())
     # bounded small path (the pagerank discipline): integer-only wedge
     # counting, exact by construction; the expansion ratio reuses the
-    # identical Spark expression on the returned local table
+    # identical Spark expression on the returned local table; the probe
+    # runs the canonicalizing distinct, so the collected pairs are
+    # exactly the ``canon`` set the distributed plan iterates
     from hazelcast_jet_spark.operators import graph_local
 
-    if graph_local.GRAPH_COLLECT_THRESHOLD > 0:
-        canon = canon.localCheckpoint()
-        arrs = graph_local.collect_int_edges(canon)
-        if arrs is not None:
-            import pandas as pd
+    arrs = graph_local.collect_int_edges(canon)
+    if arrs is not None:
+        import pandas as pd
 
-            nodes_np, deg_np, reach_np = graph_local.khop_local(
-                *arrs, max_degree=max_degree)
-            canon.unpersist(False)
-            loc = edges.sparkSession.createDataFrame(
-                pd.DataFrame({"node": nodes_np, "degree": deg_np,
-                              "reach2": reach_np}),
-                "node bigint, degree bigint, reach2 bigint")
-            return (loc.select(
-                "node", "degree", "reach2",
-                (F.round(F.col("reach2").cast("double")
-                         / F.col("degree").cast("double"),
-                         round_digits) + F.lit(0.0)).alias("expansion"))
-                .orderBy(F.desc("reach2"), "node"))
+        nodes_np, deg_np, reach_np = graph_local.khop_local(
+            *arrs, max_degree=max_degree)
+        loc = edges.sparkSession.createDataFrame(
+            pd.DataFrame({"node": nodes_np, "degree": deg_np,
+                          "reach2": reach_np}),
+            "node bigint, degree bigint, reach2 bigint")
+        return (loc.select(
+            "node", "degree", "reach2",
+            (F.round(F.col("reach2").cast("double")
+                     / F.col("degree").cast("double"),
+                     round_digits) + F.lit(0.0)).alias("expansion"))
+            .orderBy(F.desc("reach2"), "node"))
     both = canon.unionAll(
         canon.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     # feeds degrees + both wedge legs; hash(src) so the degree aggregate
@@ -1468,22 +1454,22 @@ def hits(edges: DataFrame, iters: int = 2,
     # exchange-free (the contribution sum reduces fully map-side).
     # e_src derives from the MATERIALIZED e_dst so the upstream edge
     # derivation and dedup run once.
-    e_dst = (edges.select(F.col("src").cast("long").alias("src"),
-                          F.col("dst").cast("long").alias("dst"))
-             .dropDuplicates(["src", "dst"])
-             .repartition(F.col("dst")).localCheckpoint())
+    deduped = (edges.select(F.col("src").cast("long").alias("src"),
+                            F.col("dst").cast("long").alias("dst"))
+               .dropDuplicates(["src", "dst"]))
     # bounded small path (the pagerank discipline): exact in-driver
     # replay of the half-steps below the edge threshold — same
-    # DECIMAL(28,18) sums, same IEEE max/divide; rounding stays in Spark
+    # DECIMAL(28,18) sums, same IEEE max/divide; rounding stays in Spark.
+    # The probe collects the DEDUPED edges; their order is irrelevant
+    # (exact integer sums, exact max)
     from hazelcast_jet_spark.operators import graph_local
 
-    arrs = graph_local.collect_int_edges(e_dst)
+    arrs = graph_local.collect_int_edges(deduped)
     if arrs is not None:
         import pandas as pd
 
         s_nodes, hub_s, d_nodes, auth_s = graph_local.hits_local(
             *arrs, iters=iters)
-        e_dst.unpersist(False)
         pdf = pd.DataFrame({
             "side": ["hub"] * len(s_nodes) + ["auth"] * len(d_nodes),
             "node": list(s_nodes) + list(d_nodes),
@@ -1494,6 +1480,7 @@ def hits(edges: DataFrame, iters: int = 2,
                  else F.round("score", round_digits))
         return out.select("side", "node",
                           (score + F.lit(0.0)).alias("score"))
+    e_dst = deduped.repartition(F.col("dst")).localCheckpoint()
     e_src = e_dst.repartition(F.col("src")).localCheckpoint()
     hubs = (e_src.select(F.col("src").alias("node")).distinct()
             .select("node", F.lit(1.0).alias("score")).localCheckpoint())

@@ -13,11 +13,16 @@ gate results (and their DuckDB oracles) are unchanged; the equality is
 pinned by tests/test_graph_small_path.py and the cross-path fixpoint
 pins in tests/test_graph_fixpoint.py.
 
-Scale safety: callers consult :data:`GRAPH_COLLECT_THRESHOLD` (edges;
-~16 B/edge ⇒ the default 2M edges is ≈32 MB on the driver, comfortably
-inside default driver memory and ``spark.driver.maxResultSize``) and
-fall back to the distributed loop above it, exactly like the CC small
-path.  A 100 TB co-occurrence graph never takes this path.
+Scale safety: :func:`bounded_arrow` is the one bounded driver collect.
+It runs ONE job, ``df.limit(T+1).toArrow()``, with no ``count()`` and no
+checkpoint before it: at most T+1 rows (~16 B per edge) reach the driver.
+Callers consult :data:`GRAPH_COLLECT_THRESHOLD` (edges; the default 2M
+edges is ≈32 MB on the driver, comfortably inside default driver memory
+and ``spark.driver.maxResultSize``) through :func:`collect_int_edges`,
+and fall back to the distributed loop above it.  A declined probe costs
+that one job plus the checkpoint the distributed loop starts with — the
+probe takes the place of the ``count()`` the decision used to need.  A
+100 TB co-occurrence graph never takes this path.
 
 Exactness notes (what "bit-identical" rests on):
 
@@ -52,36 +57,75 @@ _E18 = Decimal("1e-18")
 _SCALE = 10 ** 18
 
 
-def collect_int_edges(e, n_edges: int | None = None):
-    """Collect a (src, dst) integral edge frame into two int64 numpy
-    arrays, or return ``None`` when the small path must not run: edge
-    count above :data:`GRAPH_COLLECT_THRESHOLD`, non-integral endpoint
-    types, or NULLs.  ``e`` should be materialized (localCheckpoint) so
-    the count and the collect don't re-run upstream lineage."""
-    if GRAPH_COLLECT_THRESHOLD <= 0:
+def bounded_arrow(df, max_rows: int):
+    """``df`` as an Arrow table, or ``None`` when it has more than
+    ``max_rows`` rows (or ``max_rows`` <= 0, which disables the small
+    paths).  One job: ``limit(max_rows + 1)`` bounds what reaches the
+    driver, and one row more than the bound is how an oversized input
+    shows without a ``count()``."""
+    if max_rows <= 0:
         return None
+    tbl = df.limit(max_rows + 1).toArrow()
+    return None if tbl.num_rows > max_rows else tbl
+
+
+def collect_int_edges(e):
+    """Collect a (src, dst) ``bigint`` edge frame into two int64 numpy
+    arrays with :func:`bounded_arrow`, or return ``None`` when the small
+    path must not run: non-``bigint`` endpoint types (decided from the
+    schema, before any job), no edges, more edges than
+    :data:`GRAPH_COLLECT_THRESHOLD`, or NULL endpoints.
+    ``e`` need not be materialized: the probe is the only job, and a
+    caller checkpoints only after it declines."""
     dt = dict(e.dtypes)
     if dt.get("src") != "bigint" or dt.get("dst") != "bigint":
         return None
-    if n_edges is None:
-        n_edges = e.count()
-    if n_edges == 0 or n_edges > GRAPH_COLLECT_THRESHOLD:
+    tbl = bounded_arrow(e.select("src", "dst"), GRAPH_COLLECT_THRESHOLD)
+    if tbl is None or tbl.num_rows == 0:
         return None
-    import numpy as np
+    src, dst = tbl.column("src"), tbl.column("dst")
+    if src.null_count or dst.null_count:
+        return None
+    return src.to_numpy(), dst.to_numpy()
 
-    sel = e.select("src", "dst")
-    try:  # Arrow path (Spark 4): no pandas detour
-        tbl = sel.toArrow()
-        if tbl.column("src").null_count or tbl.column("dst").null_count:
-            return None
-        return (tbl.column("src").to_numpy().astype(np.int64, copy=False),
-                tbl.column("dst").to_numpy().astype(np.int64, copy=False))
-    except Exception:
-        pdf = sel.toPandas()
-        src, dst = pdf["src"], pdf["dst"]
-        if src.dtype != np.int64 or dst.dtype != np.int64:  # NULLs promoted
-            return None
-        return src.to_numpy(np.int64), dst.to_numpy(np.int64)
+
+def _pylist(col) -> list:
+    """An Arrow column as a Python list: integral ids through numpy (one
+    C pass), any other id type through ``to_pylist``."""
+    import pyarrow as pa
+
+    if pa.types.is_integer(col.type):
+        return col.to_numpy().tolist()
+    return col.to_pylist()
+
+
+def min_root_components(tbl):
+    """Union-find over the (src, dst) rows of the Arrow table ``tbl``
+    with the smaller root winning every union, so each root IS its
+    component's minimum — the reachable-minimum labeling of ``graph.wcc``
+    and ``dedup.pairs_to_groups``.  Ids may be of any orderable type.
+    Returns (nodes, roots) as lists, nodes in first-seen order."""
+    parent: dict = {}
+
+    def _find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:  # path compression
+            parent[x], x = r, parent[x]
+        return r
+
+    for x, y in zip(_pylist(tbl.column("src")),
+                    _pylist(tbl.column("dst"))):
+        parent.setdefault(x, x)
+        parent.setdefault(y, y)
+        rx, ry = _find(x), _find(y)
+        if rx != ry:
+            if ry < rx:
+                rx, ry = ry, rx
+            parent[ry] = rx
+    nodes = list(parent)
+    return nodes, [_find(n) for n in nodes]
 
 
 def _dec18(x) -> int:

@@ -440,14 +440,17 @@ class Sinks:
 
     @staticmethod
     def noop():
-        """Sinks.noop — Sinks.java:1067: drain and discard (count forces
-        full evaluation without moving data to the driver)."""
+        """Sinks.noop — Sinks.java:1067: drain and discard through Spark's
+        ``noop`` data source, which evaluates every output column without
+        moving data to the driver (a ``count()`` would let the optimizer
+        prune the columns it does not need)."""
         def sink(df: DataFrame):
             if df.isStreaming:
                 q = df.writeStream.format("noop").trigger(availableNow=True).start()
                 q.awaitTermination()
                 return None
-            return df.count()
+            df.write.format("noop").mode("overwrite").save()
+            return None
         return sink
 
     @staticmethod

@@ -8,11 +8,13 @@ Python floats, i.e. IEEE bit patterns."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from hazelcast_jet_spark.operators import graph_local
 from hazelcast_jet_spark.operators.graph import (hindex_coreness, hits,
-                                                 kcore_peel,
+                                                 kcore_peel, khop_reach,
                                                  label_propagation,
                                                  pagerank,
                                                  personalized_pagerank)
@@ -138,3 +140,119 @@ def test_small_path_declines_nulls(spark):
     df = spark.createDataFrame(
         [(1, 2), (None, 3)], "src long, dst long")
     assert graph_local.collect_int_edges(df) is None
+
+
+def _spy(monkeypatch, module, name):
+    """Count the calls of ``module.name`` (the driver-local replay)."""
+    calls = []
+    real = getattr(module, name)
+
+    def wrapped(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(module, name, wrapped)
+    return calls
+
+
+@pytest.mark.parametrize("op, replay, n_edges", [
+    # lpa collects the raw rows (the duplicate row included); hits and
+    # khop collect the deduped / canonical set their probe plan builds
+    (lambda e: label_propagation(e, iters=2), "lpa_local",
+     lambda e: e.count()),
+    (lambda e: hits(e, iters=2), "hits_local",
+     lambda e: e.distinct().count()),
+    (khop_reach, "khop_local",
+     lambda e: e.select(F.least("src", "dst"), F.greatest("src", "dst"))
+     .distinct().count()),
+])
+def test_threshold_boundary(spark, edges, monkeypatch, op, replay, n_edges):
+    """At exactly the probed edge count the small path runs; one below,
+    the probe sees T+1 rows and declines.  Both give the same rows."""
+    n = n_edges(edges)
+    calls = _spy(monkeypatch, graph_local, replay)
+    monkeypatch.setattr(graph_local, "GRAPH_COLLECT_THRESHOLD", n)
+    at = _rows(op(edges))
+    assert len(calls) == 1
+    monkeypatch.setattr(graph_local, "GRAPH_COLLECT_THRESHOLD", n - 1)
+    below = _rows(op(edges))
+    assert len(calls) == 1  # declined: the distributed loop ran
+    assert at == below and len(at) > 0
+
+
+def test_wcc_threshold_boundary(spark, edges, monkeypatch):
+    from hazelcast_jet_spark.operators import dedup
+    from hazelcast_jet_spark.operators.graph import wcc
+
+    # wcc probes the self-loop-free edge rows, duplicates included
+    n = edges.filter(F.col("src") != F.col("dst")).count()
+    calls = _spy(monkeypatch, graph_local, "min_root_components")
+    monkeypatch.setattr(dedup, "_PAIRS_COLLECT_THRESHOLD", n)
+    at = _rows(wcc(edges))
+    assert len(calls) == 1
+    monkeypatch.setattr(dedup, "_PAIRS_COLLECT_THRESHOLD", n - 1)
+    below = _rows(wcc(edges))
+    assert len(calls) == 1
+    assert at == below and len(at) > 0
+
+
+def test_small_path_declines_empty(spark):
+    df = spark.createDataFrame([], "src long, dst long")
+    assert graph_local.collect_int_edges(df) is None
+
+
+def _jobs_fired(spark, fn, group):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("name", ["pagerank", "label_propagation", "wcc"])
+def test_small_path_is_one_job(spark, tmp_path, name):
+    """Building the small-path result fires exactly ONE job — the bounded
+    Arrow probe.  A returning ``count()`` or eager checkpoint before the
+    sink shows up here as a second job."""
+    from hazelcast_jet_spark.operators import graph
+
+    path = str(tmp_path / "edges")
+    spark.createDataFrame([(i, i + 1) for i in range(40)] + [(5, 20)],
+                          "src long, dst long").write.parquet(path)
+    e = spark.read.parquet(path)
+    out = []
+    n = _jobs_fired(spark, lambda: out.append(getattr(graph, name)(e)),
+                    f"small-path-jobs-{name}")
+    assert n == 1
+    assert out[0].count() > 0
+
+
+FRACTIONS = st.one_of(
+    st.floats(0.0, 1.0, exclude_min=True, exclude_max=True),
+    # rank/deg-style quotients, and values whose shortest repr has more
+    # than 18 fractional digits (the quantize step rounds there)
+    st.integers(1, 10 ** 7).map(lambda d: 1.0 / d),
+    st.builds(lambda m, k: m * 10.0 ** -k,
+              st.floats(0.1, 1.0, exclude_max=True), st.integers(1, 20)),
+)
+
+
+@given(xs=st.lists(FRACTIONS, min_size=1, max_size=200))
+@settings(max_examples=25, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+# HALF_UP ties at the 18th digit (5e-19 rounds up, its predecessor down)
+@example(xs=[0.1, 1 / 3, 2 / 3, 0.9999999999999999, 5e-19,
+             4.999999999999999e-19, 1.5e-18, 1.2345678901234567e-05])
+def test_dec18_matches_spark_cast(spark, xs):
+    """graph_local._dec18 is Spark's cast(double AS decimal(28,18)) as a
+    scale-18 integer; the pagerank, ppr and hits small paths are
+    bit-identical to Spark only while this holds (Double.toString on the
+    JVM vs repr in Python)."""
+    df = spark.createDataFrame([(i, x) for i, x in enumerate(xs)],
+                               "i int, x double")
+    got = {r["i"]: r["d"] for r in df.select(
+        "i", F.col("x").cast("decimal(28,18)").alias("d")).collect()}
+    for i, x in enumerate(xs):
+        assert graph_local._dec18(x) == int(got[i].scaleb(18)), x

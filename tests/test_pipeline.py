@@ -6,6 +6,7 @@ Reference model: hazelcast-jet-core/src/test/java/com/hazelcast/jet/
 (JetTestSupport pipelines) and benchmark/WordCountTest.java:76-135.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from hazelcast_jet_spark import AggregateOperations as agg
@@ -356,3 +357,23 @@ def test_to_dot_string_renders_the_dataflow(spark):
 
     # an empty pipeline renders an empty graph
     assert Pipeline.create(spark).to_dot_string() == "digraph DAG {\n}"
+
+
+def test_noop_sink_evaluates_every_column(spark):
+    """Sinks.noop drains through Spark's noop data source: a column that
+    fails must fail the sink.  A ``count()`` would let the optimizer
+    prune the column, and the failure would never run."""
+
+    @F.udf("long")
+    def boom(v):
+        raise ValueError("noop sink evaluated the column")
+
+    p = Pipeline.create(spark)
+    stage = (p.read_from(TestSources.items([(i,) for i in range(4)], "v long"))
+             .map(F.col("v"), boom("v").alias("b")))
+    assert stage.df.count() == 4  # pruned: the failing column never runs
+    with pytest.raises(Exception, match="noop sink evaluated the column"):
+        stage.write_to(Sinks.noop())
+    # the drained rows are discarded, as before
+    ok = p.read_from(TestSources.items([(1,)], "v long"))
+    assert ok.write_to(Sinks.noop()) is None
