@@ -1159,15 +1159,17 @@ def khop_reach(edges: DataFrame, max_degree: int = 256,
     # counting, exact by construction; the expansion ratio reuses the
     # identical Spark expression on the returned local table; the probe
     # runs the canonicalizing distinct, so the collected pairs are
-    # exactly the ``canon`` set the distributed plan iterates
+    # exactly the ``canon`` set the distributed plan iterates.  The
+    # replay declines (None) when its wedge work is over its bound.
     from hazelcast_jet_spark.operators import graph_local
 
     arrs = graph_local.collect_int_edges(canon)
-    if arrs is not None:
+    local = (graph_local.khop_local(*arrs, max_degree=max_degree)
+             if arrs is not None else None)
+    if local is not None:
         import pandas as pd
 
-        nodes_np, deg_np, reach_np = graph_local.khop_local(
-            *arrs, max_degree=max_degree)
+        nodes_np, deg_np, reach_np = local
         loc = edges.sparkSession.createDataFrame(
             pd.DataFrame({"node": nodes_np, "degree": deg_np,
                           "reach2": reach_np}),

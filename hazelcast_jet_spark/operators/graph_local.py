@@ -53,6 +53,13 @@ from decimal import ROUND_HALF_UP, Decimal
 GRAPH_COLLECT_THRESHOLD = int(os.environ.get(
     "SPARK_GRAFT_GRAPH_COLLECT_THRESHOLD", "2000000"))
 
+#: :func:`khop_local` builds one int64 row per ordered wedge pair, so its
+#: work grows with ``sum(deg**2)`` over the capped middles, not with the
+#: edge count the collect bound checks.  It declines above this many
+#: wedges per collectable edge (8 M wedges, a few hundred MB of
+#: transient arrays, at the default edge bound).
+KHOP_WEDGES_PER_EDGE = 4
+
 _E18 = Decimal("1e-18")
 _SCALE = 10 ** 18
 
@@ -419,7 +426,10 @@ def khop_local(src, dst, max_degree: int):
     2-hop reach through middles with degree <= ``max_degree``, direct
     neighbors always counted, self excluded.  Returns (nodes, degree,
     reach2) — exact integers (the expansion ratio is computed by the
-    caller in Spark, same expression as the distributed path)."""
+    caller in Spark, same expression as the distributed path) — or
+    ``None`` when the wedge pairs would exceed
+    ``KHOP_WEDGES_PER_EDGE * GRAPH_COLLECT_THRESHOLD`` (the caller then
+    runs the distributed plan)."""
     import numpy as np
 
     lo = np.minimum(src, dst)
@@ -445,12 +455,14 @@ def khop_local(src, dst, max_degree: int):
     sizes = np.diff(np.concatenate([starts, [len(mid_s)]]))
     capped = deg[mid_s[starts]] <= max_degree
     c_sizes = sizes[capped]
-    flat = nbr_s[np.repeat(capped, sizes)]  # capped groups, compacted
-    c_off = np.cumsum(c_sizes) - c_sizes    # group offsets into flat
     # all ordered neighbor pairs within each capped middle's list:
     # element i of a size-s group pairs with all s elements
     blocks = c_sizes * c_sizes
     tot = int(blocks.sum())
+    if tot > KHOP_WEDGES_PER_EDGE * GRAPH_COLLECT_THRESHOLD:
+        return None
+    flat = nbr_s[np.repeat(capped, sizes)]  # capped groups, compacted
+    c_off = np.cumsum(c_sizes) - c_sizes    # group offsets into flat
     left = np.repeat(flat, np.repeat(c_sizes, c_sizes))
     grp = np.repeat(np.arange(len(c_sizes)), blocks)
     block_off = np.cumsum(blocks) - blocks

@@ -8,7 +8,28 @@ setting is chosen to also hold on a 1000-executor cluster at ~100 TB:
 * shuffle partitions sized for local runs; on a real cluster AQE's
   coalescePartitions makes the static number mostly irrelevant,
 * UTC session timezone so timestamp semantics match the DuckDB oracle and
-  are deployment-independent.
+  are deployment-independent,
+* streaming checkpoints committed through Spark's FileSystem-API
+  checkpoint manager (:data:`CHECKPOINT_FILE_MANAGER`).
+
+Why that manager: Spark's default ``FileContextBasedCheckpointFileManager``
+on Hadoop's ``RawLocalFileSystem`` without the native ``libhadoop`` forks
+a process for every checkpoint file it writes — ``chmod`` when it sets
+the permission of each new file and ``readlink`` when it renames one.
+Every state-store delta, offset-log and commit-log file pays those forks,
+and a traced ``stream_window`` bench run spent most of its ``addBatch``
+time in them.  The FileSystem-based manager goes through
+``FileSystem.create`` and ``rename``, which on ``file:`` paths stay in
+the JVM.
+
+What is unchanged: both managers write a temp file and rename it into
+place (a POSIX rename is atomic), both refuse a non-overwriting rename
+onto an existing file, and Spark's ``<n>.delta.crc`` checksum files and
+Hadoop's ``.crc`` sidecars are still written.  The checksum setting,
+batch retention, state store provider and shuffle partition count stay
+at their values.  The manager assumes local or POSIX checkpoint paths,
+where rename is atomic; an object store without an atomic rename needs
+a manager of its own whatever this setting says.
 """
 
 from __future__ import annotations
@@ -36,6 +57,15 @@ TABLES = (
 #: factor (region/nation are fixed-size; supplier/part grow slowly).
 BROADCAST_TABLES = ("region", "nation")
 
+#: streaming checkpoint file manager (see the module docstring): Spark's
+#: FileSystem-API manager, whose create/rename fork no process on the
+#: local file system.  Its package moved between Spark 3.5
+#: (``execution.streaming``) and 4.1 (``...checkpointing``).
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager")
+CHECKPOINT_FILE_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+
 
 def get_spark(app_name: str = "hazelcast-jet-spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -50,6 +80,7 @@ def get_spark(app_name: str = "hazelcast-jet-spark") -> SparkSession:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config(CHECKPOINT_FILE_MANAGER_CONF, CHECKPOINT_FILE_MANAGER)
     )
     return builder.getOrCreate()
 

@@ -13,6 +13,9 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hazelcast_jet_spark.session import (CHECKPOINT_FILE_MANAGER,
+                                         CHECKPOINT_FILE_MANAGER_CONF)
+
 
 def read_stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """readStream over a driver parquet table, with the same nanos→NTZ
@@ -114,11 +117,15 @@ class ephemeral_checkpoint_confs:
     pure I/O overhead (measured: −16% wall across 5 stateful streaming
     gates, and the checksum writer's shutdown stalls disappear).
     Production streams with real recovery requirements keep the session
-    defaults; this narrows the change to the ephemeral-run helpers."""
+    defaults; this narrows the change to the ephemeral-run helpers.
+    The checkpoint file manager is set as well, because these runs often
+    start in a session that ``get_spark`` did not build and so would
+    fork a process per checkpoint file (see ``session``'s docstring)."""
 
     _CONFS = {
         "spark.sql.streaming.checkpoint.fileChecksum.enabled": "false",
         "spark.sql.streaming.minBatchesToRetain": "2",
+        CHECKPOINT_FILE_MANAGER_CONF: CHECKPOINT_FILE_MANAGER,
     }
 
     def __init__(self, spark: SparkSession):

@@ -82,6 +82,7 @@ _SLOW_TESTS = {
     "test_r12_operators.py::test_degree_assortativity_closed_forms",
     "test_r12_operators.py::test_stream_cusum_equals_batch",
     "test_r12_operators.py::test_stream_funnel_equals_batch",
+    "test_rescaling.py::test_default_manager_checkpoint_resumes_under_get_spark",
     "test_rescaling.py::test_stateful_restart_under_different_parallelism",
     "test_source_builder.py::test_batch_source_builder",
     "test_sql.py::test_create_mapping_and_query",

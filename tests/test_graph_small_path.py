@@ -196,6 +196,38 @@ def test_wcc_threshold_boundary(spark, edges, monkeypatch):
     assert at == below and len(at) > 0
 
 
+def test_khop_wedge_bound_boundary(spark, monkeypatch):
+    """A star's centre makes d**2 wedge pairs from d edges, so the edge
+    bound alone would admit it.  With the wedge count exactly at
+    ``KHOP_WEDGES_PER_EDGE * GRAPH_COLLECT_THRESHOLD`` the replay runs;
+    lowering the threshold by one puts the count just above the bound
+    (the edge probe still passes), the replay declines, and the
+    distributed plan gives the same rows."""
+    k = graph_local.KHOP_WEDGES_PER_EDGE
+    d = next(d for d in range(8, 8 + 2 * k) if d * (d + 1) % k == 0)
+    star = spark.createDataFrame([(0, i) for i in range(1, d + 1)],
+                                 "src long, dst long")
+    wedges = d * d + d  # the centre's d**2, plus 1 per leaf
+    replays = []
+    real = graph_local.khop_local
+
+    def spy(*a, **kw):
+        out = real(*a, **kw)
+        replays.append(out is not None)
+        return out
+
+    monkeypatch.setattr(graph_local, "khop_local", spy)
+    monkeypatch.setattr(graph_local, "GRAPH_COLLECT_THRESHOLD", wedges // k)
+    at = _rows(khop_reach(star, max_degree=d))
+    monkeypatch.setattr(graph_local, "GRAPH_COLLECT_THRESHOLD",
+                        wedges // k - 1)
+    above = _rows(khop_reach(star, max_degree=d))
+    assert wedges // k - 1 >= d  # the edge probe passed both times
+    assert replays == [True, False]
+    assert at == above and len(at) == d + 1
+    assert at[0] == (0, d, d, 1.0)
+
+
 def test_small_path_declines_empty(spark):
     df = spark.createDataFrame([], "src long, dst long")
     assert graph_local.collect_int_edges(df) is None

@@ -1026,3 +1026,122 @@ def test_corpus_card_fold_matches_full_card_shared_columns(spark, sf_dir):
     l = [tuple(r) for r in lite.select(shared).orderBy("source").collect()]
     f = [tuple(r) for r in full.select(shared).orderBy("source").collect()]
     assert l == f
+
+
+def test_checkpoint_file_manager_loads(spark):
+    """The configured checkpoint file manager class exists on this JVM and
+    is what Spark's factory builds for the session.  Spark moved the class
+    between 3.5 and 4.1; a move shows here instead of as every stream
+    failing at start.  ``ephemeral_checkpoint_confs`` sets the same
+    manager in a session ``get_spark`` did not configure."""
+    from functools import reduce
+
+    from hazelcast_jet_spark.session import (CHECKPOINT_FILE_MANAGER,
+                                             CHECKPOINT_FILE_MANAGER_CONF)
+    from hazelcast_jet_spark.streaming.run import ephemeral_checkpoint_confs
+
+    assert spark.conf.get(CHECKPOINT_FILE_MANAGER_CONF) == CHECKPOINT_FILE_MANAGER
+    jvm = spark._jvm
+    assert jvm.java.lang.Class.forName(CHECKPOINT_FILE_MANAGER).getName() \
+        == CHECKPOINT_FILE_MANAGER
+    factory = reduce(getattr, (CHECKPOINT_FILE_MANAGER.rsplit(".", 1)[0]
+                               + ".CheckpointFileManager").split("."), jvm)
+    made = factory.create(jvm.org.apache.hadoop.fs.Path("file:///tmp"),
+                          spark._jsparkSession.sessionState().newHadoopConf())
+    assert made.getClass().getName() == CHECKPOINT_FILE_MANAGER
+
+    spark.conf.unset(CHECKPOINT_FILE_MANAGER_CONF)
+    try:
+        with ephemeral_checkpoint_confs(spark):
+            assert spark.conf.get(CHECKPOINT_FILE_MANAGER_CONF) == CHECKPOINT_FILE_MANAGER
+        assert spark.conf.get(CHECKPOINT_FILE_MANAGER_CONF, None) is None
+    finally:
+        spark.conf.set(CHECKPOINT_FILE_MANAGER_CONF, CHECKPOINT_FILE_MANAGER)
+
+
+def test_session_checkpoint_state_and_restart(spark, tmp_path):
+    """The checkpoint a ``get_spark`` session writes: a sliding-window
+    count on rate-micro-batch, stopped after a few batches, leaves exactly
+    the open windows' counts in the state store, with Spark's
+    ``<n>.delta.crc`` checksum and Hadoop's ``.<n>.delta.crc`` sidecar in
+    every state partition; a restart from it emits the next windows with
+    their closed-form counts, none duplicated or lost."""
+    import threading
+
+    from hazelcast_jet_spark import AggregateOperations as A
+    from hazelcast_jet_spark import Pipeline, Sinks, WindowDefinition
+
+    rows, keys, t0 = 100, 10, 1_600_000_000   # batch b: values [b*rows, (b+1)*rows) at t0+b s
+    per_batch = rows // keys
+    ckpt = str(tmp_path / "ckpt")
+
+    def run(n_batches):
+        out, done = {}, threading.Event()
+
+        def on_batch(bdf, bid):
+            # a batch the stop interrupted before its commit is replayed
+            # under the same id on restart: keep one output per id
+            out[bid] = sorted(tuple(r) for r in bdf.select(
+                F.col("window_start").cast("long") - t0, "key", "n").collect())
+            if len(out) >= n_batches:
+                done.set()
+
+        source = lambda s: (s.readStream.format("rate-micro-batch")  # noqa: E731
+                            .option("rowsPerBatch", rows)
+                            .option("numPartitions", 2)
+                            .option("startTimestamp", t0 * 1000)
+                            .option("advanceMillisPerBatch", 1000).load())
+        q = (Pipeline.create(spark).read_from(source)
+             .add_timestamps("timestamp", "0 seconds")
+             .with_column("key", F.col("value") % keys)
+             .grouping_key("key")
+             .window(WindowDefinition.sliding("2 seconds", "1 second"))
+             .aggregate(n=A.counting())
+             .write_to(Sinks.for_each_batch(on_batch, checkpoint=ckpt)))
+        try:
+            assert done.wait(120), q.exception()
+        finally:
+            q.stop()
+        return out
+
+    def last_commit():
+        return max(int(f) for f in os.listdir(os.path.join(ckpt, "commits"))
+                   if f.isdigit())
+
+    def closed_form(w, last):
+        # window [w, w+2) holds the batches w and w+1 that ran by ``last``
+        return per_batch * sum(1 for b in (w, w + 1) if 0 <= b <= last)
+
+    first = run(4)
+    last = last_commit()
+    emitted = {w for bid, out in first.items() if bid <= last for w, _, _ in out}
+    open_windows = set(range(-1, last + 1)) - emitted
+    state = {(r.w, r.key): r.n for r in spark.read.format("statestore").load(ckpt)
+             .select((F.col("key.window.start").cast("long") - t0).alias("w"),
+                     F.col("key.key").alias("key"), F.col("value.count").alias("n"))
+             .collect()}
+    assert open_windows and state == {
+        (w, k): closed_form(w, last) for w in open_windows for k in range(keys)}
+
+    parts = glob.glob(os.path.join(ckpt, "state", "0", "[0-9]*"))
+    assert len(parts) == int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for p in parts:
+        names = set(os.listdir(p))
+        for v in range(1, last + 2):   # state version = batch id + 1
+            assert {f"{v}.delta", f"{v}.delta.crc", f".{v}.delta.crc"} <= names, (p, v)
+
+    second = run(3)
+    assert max(second) > last and min(second) == last + 1
+    for bid in set(first) & set(second):
+        assert first[bid] == second[bid]    # a replayed batch emits the same rows
+    by_window = {}
+    for bid, out in {**first, **second}.items():
+        for w, k, n in out:
+            by_window.setdefault(w, {}).setdefault(k, []).append((bid, n))
+    assert open_windows <= set(by_window)   # the restart closed the open windows
+    assert sorted(by_window) == list(range(-1, max(by_window) + 1))
+    for w, per_key in by_window.items():
+        assert sorted(per_key) == list(range(keys)), w
+        for k, seen in per_key.items():
+            assert len(seen) == 1, (w, k, seen)             # not duplicated
+            assert seen[0][1] == closed_form(w, seen[0][0]), (w, k, seen)
