@@ -116,9 +116,11 @@ def sorting(c: str | Column, asc: bool = True) -> Column:
 
 
 def to_map(key: str | Column, value: str | Column) -> Column:
-    """toMap(keyFn, valFn) — AggregateOperations.java:844.  Duplicate keys
-    keep an arbitrary value (Jet's no-merge variant throws; Spark keeps
-    last) — pre-aggregate per key for deterministic results."""
+    """toMap(keyFn, valFn) — AggregateOperations.java:844.  A duplicate
+    key raises under Spark's default ``spark.sql.mapKeyDedupPolicy``
+    (EXCEPTION), as Jet's no-merge variant throws; under LAST_WIN it
+    keeps an arbitrary value — pre-aggregate per key for deterministic
+    results."""
     return F.map_from_entries(F.collect_list(F.struct(_col(key), _col(value))))
 
 

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from hazelcast_jet_spark.operators.graph_local import (bounded_arrow,
+                                                       fixpoint,
                                                        min_root_components)
 from hazelcast_jet_spark.operators.text import normalize_text
 from hazelcast_jet_spark.session import ensure_parallelism
@@ -943,7 +944,10 @@ def pairs_to_groups(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     O(log diameter), so ``max_iter=20`` handles components of diameter
     ~2^20 instead of 20 — adversarial chains stop being a correctness
     ceiling and each saved round saves a full join+checkpoint job.
-    Returns (node, group) where group = min doc id reachable.
+    Returns (node, group) where group = min doc id reachable.  The
+    rounds run under :func:`graph_local.fixpoint`: when the labels still
+    change in round ``max_iter`` it raises ``RuntimeError`` rather than
+    return labels that are not yet the reachable minimum.
 
     At 100 TB the iterated frame is only the nodes that appear in pairs
     (the contaminated minority), never the corpus.
@@ -983,8 +987,9 @@ def pairs_to_groups(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
         edges.select(F.col("src").alias("node")).distinct()
         .withColumn("label", F.col("node"))
     )
-    prev_cp = None
-    for _ in range(max_iter):
+
+    def _round(cur: DataFrame) -> DataFrame:
+        labels = cur.drop("_chg")
         neigh = (
             edges.join(labels, edges.dst == labels.node)
             .groupBy("src").agg(F.min("label").alias("nmin"))
@@ -1016,17 +1021,18 @@ def pairs_to_groups(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
                  < F.col("_old")).alias("_chg"),
             )
         )
-        # checkpoint FIRST (cut lineage, compute the round once), then read
-        # the convergence probe from the checkpointed frame — computing
-        # `changed` off the raw plan would execute the round's join twice
-        cp = new_labels.localCheckpoint(eager=True)
-        changed = cp.filter(F.col("_chg")).limit(1).count()
-        if prev_cp is not None:
-            prev_cp.unpersist()  # drop the previous round's checkpoint blocks
-        labels = cp.drop("_chg")
-        prev_cp = cp
-        if changed == 0:
-            break
+        # checkpoint FIRST (cut lineage, compute the round once); the
+        # convergence probe then reads the checkpointed frame — computing
+        # it off the raw plan would execute the round's join twice
+        return new_labels.localCheckpoint(eager=True)
+
+    labels, _ = fixpoint(
+        labels, _round, until_fixpoint=True, max_rounds=max_iter,
+        changed=lambda new, old: (
+            new.filter(F.col("_chg")).limit(1).count() > 0),
+        release=lambda old: old.unpersist(),
+        what=f"pairs_to_groups did not reach the min-label fixpoint in "
+             f"{max_iter} rounds (raise max_iter)")
     return labels.select(F.col("node"), F.col("label").alias("group"))
 
 

@@ -32,8 +32,12 @@ Design notes for 100 TB:
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from hazelcast_jet_spark.operators import graph_local
 
 
 def cooccurrence_edges(df: DataFrame, group_col: str, node_col: str,
@@ -215,6 +219,30 @@ def graph_summary(edges: DataFrame, round_digits: int = 6) -> DataFrame:
     )
 
 
+def _replayed(edges: DataFrame, replay, ddl: str) -> DataFrame | None:
+    """An iterative operator's bounded small path (guide §1.2 #1; the
+    wcc/pairs_to_groups r12 precedent): below the threshold the
+    per-round checkpoint and aggregate jobs cost more in
+    driver-synchronized scheduling than ONE bounded collect plus an
+    exact in-driver replay.  The probe (:func:`graph_local.
+    collect_int_edges`) is the only job; nothing is checkpointed before
+    it.  ``replay(src, dst)`` reruns the operator's rounds bit-identically
+    (operators/graph_local.py) and returns one array per ``ddl`` column,
+    or None to decline.  Returns the local table, or None when the
+    distributed loop must run."""
+    arrs = graph_local.collect_int_edges(edges)
+    cols = None if arrs is None else replay(*arrs)
+    if cols is None:
+        return None
+    names = [c.split()[0] for c in ddl.split(",")]
+    return edges.sparkSession.createDataFrame(
+        pd.DataFrame(dict(zip(names, cols))), ddl)
+
+
+def _unpersist(df: DataFrame) -> None:
+    df.unpersist(False)
+
+
 def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
              round_digits: int = 9,
              broadcast_ranks: bool | None = None,
@@ -225,17 +253,15 @@ def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
     power iterations from the uniform start — the deterministic form a
     corpus pipeline uses as a link-quality prior.  ``until_fixpoint=
     True`` makes the documented convergence-stopping contract
-    executable: the IDENTICAL per-round plan loops until no node's
-    rank moves by more than ``tol`` (default: half an ulp at the
-    ``round_digits`` reporting grain, 0.5·10^-round_digits), checked as
-    a per-round join-on-node + ``count()`` of still-moving rows over
-    the two localCheckpointed rank tables (one scalar; the checkpoint
-    materializes each round anyway).  ``max_rounds`` bounds the loop
-    (raises rather than silently returning a non-converged table);
-    ``rounds_out`` receives the executed round count when given a list
-    — tests/test_graph_fixpoint.py uses it to pin
-    ``until_fixpoint`` == ``iters=<rounds taken>`` exactly, proving the
-    two paths share one round body.
+    executable: :func:`graph_local.fixpoint` loops the IDENTICAL round
+    until no node's rank moves by more than ``tol`` (default: half an
+    ulp at the ``round_digits`` reporting grain, 0.5·10^-round_digits),
+    checked as a join-on-node + ``count()`` of still-moving rows over
+    the two checkpointed rank tables, and raises at ``max_rounds``
+    rather than return a non-converged table.  ``rounds_out`` receives
+    the executed round count when given a list — tests/
+    test_graph_fixpoint.py uses it to pin ``until_fixpoint`` ==
+    ``iters=<rounds taken>`` exactly; it also skips the small path.
 
     r_{t+1}(v) = (1−d)/N + d · Σ_{u→v} r_t(u)/deg(u)
 
@@ -262,34 +288,44 @@ def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
         raise ValueError("iters must be >= 1")
     if not 0.0 < damping < 1.0:
         raise ValueError("damping must be in (0, 1)")
-    # Size-adaptive small path (guide §1.2 #1; the wcc/pairs_to_groups
-    # r12 precedent): below the bounded threshold the per-round
-    # checkpoint + aggregate jobs cost more in driver-synchronized
-    # scheduling than ONE bounded collect + an exact in-driver replay
-    # of the identical round body (operators/graph_local.py — same
-    # DECIMAL(28,18) quantization, same IEEE op order; the final
-    # decimal round stays in Spark).  The bounded probe is the only job;
-    # the edges are checkpointed only once it declines.  Skipped when
-    # ``rounds_out`` is given — that requests the distributed iteration
-    # contract the fixpoint tests pin round counts against.
+    if tol is None:
+        tol = 0.5 * 10.0 ** (-round_digits)
+    ranks = _ranks(edges, None, iters, damping, broadcast_ranks,
+                   until_fixpoint, tol, max_rounds, rounds_out)
+    return ranks.select(
+        "node", F.round("rank", round_digits).alias("pagerank"))
+
+
+def _ranks(edges: DataFrame, seeds: DataFrame | None, iters: int,
+           damping: float, broadcast_ranks: bool | None,
+           until_fixpoint: bool = False, tol: float = 0.0,
+           max_rounds: int = 64,
+           rounds_out: list | None = None) -> DataFrame:
+    """The unrounded ``(node, rank)`` table behind :func:`pagerank`
+    (``seeds`` None: uniform teleport) and
+    :func:`personalized_pagerank` (teleport onto the ``seeds`` nodes):
+    one small path, one distributed round body."""
+
+    def _replay(src, dst):
+        seed_ids = None
+        if seeds is not None:
+            # the seed collect is bounded by the same probe as the edges
+            if dict(seeds.dtypes).get("node") != "bigint":
+                return None
+            tbl = graph_local.bounded_arrow(
+                seeds.select("node"), graph_local.GRAPH_COLLECT_THRESHOLD)
+            if tbl is None or tbl.column("node").null_count:
+                return None
+            seed_ids = np.unique(tbl.column("node").to_numpy())
+        return graph_local.pagerank_local(
+            src, dst, iters=iters, damping=damping,
+            until_fixpoint=until_fixpoint, tol=tol, max_rounds=max_rounds,
+            seeds=seed_ids)
+
     if rounds_out is None:
-        from hazelcast_jet_spark.operators import graph_local
-
-        arrs = graph_local.collect_int_edges(edges)
-        if arrs is not None:
-            nodes_np, ranks_np, _ = graph_local.pagerank_local(
-                *arrs, iters=iters, damping=damping,
-                until_fixpoint=until_fixpoint,
-                tol=(tol if tol is not None
-                     else 0.5 * 10.0 ** (-round_digits)),
-                max_rounds=max_rounds)
-            import pandas as pd
-
-            out = edges.sparkSession.createDataFrame(
-                pd.DataFrame({"node": nodes_np, "rank": ranks_np}),
-                "node bigint, rank double")
-            return out.select(
-                "node", F.round("rank", round_digits).alias("pagerank"))
+        local = _replayed(edges, _replay, "node bigint, rank double")
+        if local is not None:
+            return local
     edges = edges.localCheckpoint()  # one materialization feeds both directions
     # hash-partitioned by dst: each round's contribution aggregate is
     # keyed on dst, so the persisted partitioning serves every
@@ -303,20 +339,29 @@ def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
         .repartition(F.col("dst"))
         .persist()
     )
-    nodes = (
-        directed.groupBy("dst").agg(F.count(F.lit(1)).alias("__deg"))
-        .select(F.col("dst").alias("node"), "__deg")
-        .localCheckpoint()
-    )
-    n = nodes.count()
+    nodes = (directed.groupBy("dst").agg(F.count(F.lit(1)).alias("__deg"))
+             .select(F.col("dst").alias("node"), "__deg"))
+    if seeds is not None:
+        nodes = (nodes.join(seeds.select("node").distinct()
+                            .withColumn("__seed", F.lit(True)),
+                            "node", "left")
+                 .select("node", "__deg",
+                         F.coalesce("__seed", F.lit(False)).alias("__seed")))
+    nodes = nodes.localCheckpoint()
+    # the teleport set's size: a single driver-side scalar (one long)
+    n = (nodes if seeds is None else nodes.filter(F.col("__seed"))).count()
+    if seeds is not None and n == 0:
+        raise ValueError("no seed appears in the edge list")
     if broadcast_ranks is None:
-        broadcast_ranks = n <= BROADCAST_NODES_MAX
+        broadcast_ranks = (n if seeds is None
+                           else nodes.count()) <= BROADCAST_NODES_MAX
     # Python doubles: IEEE-identical to the same divisions done
     # in-engine (and in the SQL oracle), so ranks stay bit-portable
-    r0 = 1.0 / float(n)
-    base_term = (1.0 - damping) / float(n)
-    ranks = nodes.select(
-        "node", "__deg", F.lit(r0).alias("rank")).localCheckpoint()
+    start, base = F.lit(1.0 / float(n)), F.lit((1.0 - damping) / float(n))
+    if seeds is not None:
+        start = F.when(F.col("__seed"), start).otherwise(F.lit(0.0))
+        base = F.when(F.col("__seed"), base).otherwise(F.lit(0.0))
+    ranks = nodes.select(*nodes.columns, start.alias("rank")).localCheckpoint()
 
     def _round(cur: DataFrame) -> DataFrame:
         side = cur.select(
@@ -330,60 +375,37 @@ def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
             .agg(F.sum(F.col("__c").cast("decimal(28,18)"))
                  .cast("double").alias("__in"))
         )
+        # NOTE (r12 optimization round): lazily chaining the bounded
+        # rounds (skipping this localCheckpoint) was tried and REVERTED —
+        # deterministic job/stage/task counts got WORSE (24→28 jobs,
+        # 286→415 tasks): the checkpoint is what lets AQE plan each
+        # round's nodes⋈contrib join with the runtime size of the
+        # previous round (broadcast), while the lazy chain plans the
+        # whole tree statically as sort-merge joins.
         return (
             nodes.join(contrib, "node", "left")
-            .select(
-                "node", "__deg",
-                (F.lit(base_term)
-                 + F.lit(damping) * F.coalesce(F.col("__in"), F.lit(0.0))
-                 ).alias("rank"))
+            .select(*nodes.columns,
+                    (base + F.lit(damping)
+                     * F.coalesce(F.col("__in"), F.lit(0.0))).alias("rank"))
             .localCheckpoint()
         )
 
-    rounds = 0
-    if until_fixpoint:
-        if tol is None:
-            tol = 0.5 * 10.0 ** (-round_digits)
-        while True:
-            if rounds >= max_rounds:
-                raise RuntimeError(
-                    f"pagerank did not converge to tol={tol} in "
-                    f"{max_rounds} rounds (raise max_rounds or loosen "
-                    "tol)")
-            prev = ranks
-            ranks = _round(ranks)
-            rounds += 1
-            moving = (ranks.alias("n")
-                      .join(prev.select("node", F.col("rank")
-                                        .alias("__pr")), "node")
-                      .filter(F.abs(F.col("rank") - F.col("__pr"))
-                              > F.lit(tol))
-                      .count())
-            prev.unpersist(False)
-            if moving == 0:
-                break
-        # fixpoint ranks are materialized: the edge expansion's blocks
-        # can be released eagerly (the fixed-iters path returns a lazy
-        # plan over `directed` and leaves release to the ContextCleaner)
-        directed.unpersist(False)
-    else:
-        # NOTE (r12 optimization round): lazily chaining the bounded
-        # rounds (skipping per-round localCheckpoint) was tried and
-        # REVERTED — deterministic job/stage/task counts got WORSE
-        # (24→28 jobs, 286→415 tasks): the checkpoint is what lets AQE
-        # plan each round's nodes⋈contrib join with the runtime size of
-        # the previous round (broadcast), while the lazy chain plans the
-        # whole tree statically as sort-merge joins.
-        for _ in range(iters):
-            prev = ranks
-            ranks = _round(ranks)
-            rounds += 1
-            prev.unpersist(False)
-        directed.unpersist(False)
+    def _moving(new: DataFrame, old: DataFrame) -> bool:
+        return (new.join(old.select("node", F.col("rank").alias("__pr")),
+                         "node")
+                .filter(F.abs(F.col("rank") - F.col("__pr")) > F.lit(tol))
+                .count() > 0)
+
+    ranks, rounds = graph_local.fixpoint(
+        ranks, _round, iters=iters, until_fixpoint=until_fixpoint,
+        max_rounds=max_rounds, changed=_moving, release=_unpersist,
+        what=graph_local.PAGERANK_GUARD.format(tol=tol,
+                                               max_rounds=max_rounds))
+    # the ranks are materialized: the edge expansion's blocks can go
+    directed.unpersist(False)
     if rounds_out is not None:
         rounds_out.append(rounds)
-    return ranks.select(
-        "node", F.round("rank", round_digits).alias("pagerank"))
+    return ranks
 
 
 def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
@@ -399,11 +421,12 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
 
         r_{{t+1}}(v) = (1−d)·[v ∈ S]/|S| + d · Σ_{{u→v}} r_t(u)/deg(u)
 
-    from the seed-uniform start r_0 = [v ∈ S]/|S|.  Same execution body
-    as :func:`pagerank` (directed expansion persisted once, broadcast-or-
-    SMJ contribution join, DECIMAL(28,18) order-free contribution sums,
-    per-iteration localCheckpoint) with the base term restricted to the
-    seed rows — bit-portable to an unrolled SQL oracle.
+    from the seed-uniform start r_0 = [v ∈ S]/|S|.  The execution body
+    IS :func:`pagerank`'s (small path, directed expansion persisted
+    once, broadcast-or-SMJ contribution join, DECIMAL(28,18) order-free
+    contribution sums, per-iteration localCheckpoint) with the start and
+    base terms restricted to the seed rows — bit-portable to an
+    unrolled SQL oracle.
 
     ``seeds`` is a 1-column ``node`` frame; seeds not present in the
     edge list are ignored (they have no outgoing mass and receive no
@@ -415,83 +438,7 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
         raise ValueError("iters must be >= 1")
     if not 0.0 < damping < 1.0:
         raise ValueError("damping must be in (0, 1)")
-    # bounded small path — the pagerank discipline (same round body
-    # with the seed-restricted base term; graph_local.pagerank_local);
-    # the seed collect is bounded by the same probe as the edges
-    from hazelcast_jet_spark.operators import graph_local
-
-    arrs = graph_local.collect_int_edges(edges)
-    if arrs is not None and dict(seeds.dtypes).get("node") == "bigint":
-        import numpy as np
-        import pandas as pd
-
-        seed_tbl = graph_local.bounded_arrow(
-            seeds.select("node"), graph_local.GRAPH_COLLECT_THRESHOLD)
-        seed_col = None if seed_tbl is None else seed_tbl.column("node")
-        if seed_col is not None and not seed_col.null_count:
-            seed_ids = np.unique(seed_col.to_numpy())
-            nodes_np, ranks_np, _ = graph_local.pagerank_local(
-                *arrs, iters=iters, damping=damping, seeds=seed_ids)
-            out = edges.sparkSession.createDataFrame(
-                pd.DataFrame({"node": nodes_np, "rank": ranks_np}),
-                "node bigint, rank double")
-            return out.select(
-                "node", (F.round("rank", round_digits) + F.lit(0.0))
-                .alias("pagerank"))
-    edges = edges.localCheckpoint()
-    # hash(dst) partitioning reused by every round's contribution
-    # aggregate and by the symmetric degree init — see pagerank
-    directed = (
-        edges.select("src", "dst")
-        .unionAll(edges.select(F.col("dst").alias("src"),
-                               F.col("src").alias("dst")))
-        .repartition(F.col("dst"))
-        .persist()
-    )
-    nodes = (
-        directed.groupBy("dst").agg(F.count(F.lit(1)).alias("__deg"))
-        .select(F.col("dst").alias("node"), "__deg")
-        .join(seeds.select(F.col("node")).distinct()
-              .withColumn("__seed", F.lit(True)), "node", "left")
-        .select("node", "__deg",
-                F.coalesce("__seed", F.lit(False)).alias("__seed"))
-        .localCheckpoint()
-    )
-    ns = nodes.filter(F.col("__seed")).count()
-    if ns == 0:
-        raise ValueError("no seed appears in the edge list")
-    if broadcast_ranks is None:
-        broadcast_ranks = nodes.count() <= BROADCAST_NODES_MAX
-    r0 = 1.0 / float(ns)
-    base_term = (1.0 - damping) / float(ns)
-    base = F.when(F.col("__seed"), F.lit(base_term)).otherwise(F.lit(0.0))
-    ranks = nodes.select(
-        "node", "__deg", "__seed",
-        F.when(F.col("__seed"), F.lit(r0)).otherwise(F.lit(0.0))
-        .alias("rank")).localCheckpoint()
-    for _ in range(iters):
-        side = ranks.select(
-            F.col("node").alias("src"),
-            (F.col("rank") / F.col("__deg").cast("double")).alias("__c"))
-        if broadcast_ranks:
-            side = F.broadcast(side)
-        contrib = (
-            directed.join(side, "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("__c").cast("decimal(28,18)"))
-                 .cast("double").alias("__in"))
-        )
-        prev = ranks
-        ranks = (
-            nodes.join(contrib, "node", "left")
-            .select(
-                "node", "__deg", "__seed",
-                (base + F.lit(damping)
-                 * F.coalesce(F.col("__in"), F.lit(0.0))).alias("rank"))
-            .localCheckpoint()
-        )
-        prev.unpersist(False)
-    directed.unpersist(False)
+    ranks = _ranks(edges, seeds, iters, damping, broadcast_ranks)
     return ranks.select(
         "node", (F.round("rank", round_digits) + F.lit(0.0))
         .alias("pagerank"))
@@ -687,16 +634,13 @@ def kcore_peel(edges: DataFrame, k: int, iters: int = 4,
     k-core, equal as soon as one round removes nothing; peeling is
     monotone, so extra rounds only shrink toward the fixpoint.  The
     FIXED round count is what makes a SQL oracle an exact unrolled
-    replay; ``until_fixpoint=True`` is the production contract made
-    executable: it loops the IDENTICAL per-round plan until the
-    surviving edge count stops changing (each localCheckpoint
-    materializes the round anyway, so the termination ``count()`` is a
-    cached-scan scalar, not a recompute), bounded by ``max_rounds``.
+    replay; ``until_fixpoint=True`` runs the IDENTICAL round under
+    :func:`graph_local.fixpoint` until the surviving edge count stops
+    changing (a cached-scan ``count()`` of each checkpointed round).
     Edge-count-stable ⟺ no node dropped, because any dropped node has
     degree ≥ 1 in the current subgraph (degree-0 nodes don't appear in
     an edge-derived frame) and takes its edges with it.  Peeling is
-    monotone so the loop always terminates — the ``max_rounds``
-    overflow guard raises rather than returning a non-fixpoint.
+    monotone, so the ``max_rounds`` raise is a misconfiguration guard.
     ``rounds_out``, if given a list, receives the number of peel
     rounds executed (the no-op confirming round included) — the hook
     the equality pin in tests/test_graph_fixpoint.py uses to prove
@@ -706,8 +650,7 @@ def kcore_peel(edges: DataFrame, k: int, iters: int = 4,
     shuffles over the edge list) and two LEFT SEMI joins of the edge
     list against the survivor set (broadcastable — survivors are
     nodes, orders of magnitude smaller than edges); the edge list is
-    localCheckpointed per round (the pagerank iterative-lineage
-    discipline, O(1) plan depth).
+    localCheckpointed per round (O(1) plan depth).
 
     Returns ``(node, degree)`` — each survivor with its degree in the
     peeled subgraph (≥ k only at the fixpoint; one round short of it a
@@ -718,22 +661,14 @@ def kcore_peel(edges: DataFrame, k: int, iters: int = 4,
         raise ValueError(f"k must be >= 1, got {k}")
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    # bounded small path: the peel is integer-only (degrees + survivor
-    # filters), so the in-driver replay is exact by construction;
-    # skipped when ``rounds_out`` requests the distributed contract
+    # small path: the peel is integer-only, so the replay is exact;
+    # ``rounds_out`` asks for the distributed contract instead
     if rounds_out is None:
-        from hazelcast_jet_spark.operators import graph_local
-
-        arrs = graph_local.collect_int_edges(edges)
-        if arrs is not None:
-            import pandas as pd
-
-            nodes_np, deg_np, _ = graph_local.kcore_local(
-                *arrs, k=k, iters=iters, until_fixpoint=until_fixpoint,
-                max_rounds=max_rounds)
-            return edges.sparkSession.createDataFrame(
-                pd.DataFrame({"node": nodes_np, "degree": deg_np}),
-                "node bigint, degree bigint")
+        local = _replayed(edges, lambda src, dst: graph_local.kcore_local(
+            src, dst, k=k, iters=iters, until_fixpoint=until_fixpoint,
+            max_rounds=max_rounds), "node bigint, degree bigint")
+        if local is not None:
+            return local
     e = edges.select("src", "dst").localCheckpoint(eager=True)
 
     def _round(cur: DataFrame) -> DataFrame:
@@ -753,28 +688,17 @@ def kcore_peel(edges: DataFrame, k: int, iters: int = 4,
         survivors.unpersist(False)
         return new
 
-    rounds = 0
-    if until_fixpoint:
-        prev = e.count()
-        while True:
-            if rounds >= max_rounds:
-                raise RuntimeError(
-                    f"kcore_peel did not reach fixpoint in {max_rounds} "
-                    "rounds (monotone peel: raise max_rounds)")
-            prev_e = e
-            e = _round(e)
-            prev_e.unpersist(False)
-            rounds += 1
-            cur = e.count()
-            if cur == prev:
-                break
-            prev = cur
-    else:
-        for _ in range(iters):
-            prev_e = e
-            e = _round(e)
-            prev_e.unpersist(False)
-            rounds += 1
+    # surviving edge counts, one cached-scan scalar per fixpoint round
+    sizes = [e.count()] if until_fixpoint else []
+
+    def _shrank(new: DataFrame, old: DataFrame) -> bool:
+        sizes.append(new.count())
+        return sizes[-1] != sizes[-2]
+
+    e, rounds = graph_local.fixpoint(
+        e, _round, iters=iters, until_fixpoint=until_fixpoint,
+        max_rounds=max_rounds, changed=_shrank, release=_unpersist,
+        what=graph_local.KCORE_GUARD.format(max_rounds=max_rounds))
     if rounds_out is not None:
         rounds_out.append(rounds)
     return degrees(e)
@@ -795,14 +719,13 @@ def hindex_coreness(edges: DataFrame, iters: int = 3,
     (the :func:`pagerank` convention); after convergence the values ARE
     coreness, before it they are a monotone upper bound (documented
     honest semantics — on small-diameter graphs 2–3 rounds reach the
-    fixpoint).  ``until_fixpoint=True`` is the executable production
-    contract (the r11 graph-lane convention): the IDENTICAL round loops
-    until no node's value changes (one join-on-node + ``count()`` of
-    changed rows per round over the localCheckpointed value tables);
-    the h-index sequence is monotone non-increasing and
-    integer-bounded, so it always terminates — ``max_rounds`` raising
-    is a misconfiguration guard, and the converged values are EXACT
-    Seidman coreness (Lü et al. 2016, Theorem 1).
+    fixpoint).  ``until_fixpoint=True`` runs the IDENTICAL round under
+    :func:`graph_local.fixpoint` until no node's value changes (one
+    join-on-node + ``count()`` of changed rows per round); the h-index
+    sequence is monotone non-increasing and integer-bounded, so
+    ``max_rounds`` raising is a misconfiguration guard, and the
+    converged values are EXACT Seidman coreness (Lü et al. 2016,
+    Theorem 1).
 
     Per-round plan: one equi-join of the directed edge list against the
     (node, value) table, one per-node descending window (in-partition
@@ -814,22 +737,14 @@ def hindex_coreness(edges: DataFrame, iters: int = 3,
     """
     if iters < 1:
         raise ValueError("iters must be >= 1")
-    # bounded small path: the h-index rounds are integer-only, so the
-    # in-driver replay is exact by construction; skipped when
-    # ``rounds_out`` requests the distributed iteration contract
+    # small path: the h-index rounds are integer-only, so the replay is
+    # exact; ``rounds_out`` asks for the distributed contract instead
     if rounds_out is None:
-        from hazelcast_jet_spark.operators import graph_local
-
-        arrs = graph_local.collect_int_edges(edges)
-        if arrs is not None:
-            import pandas as pd
-
-            nodes_np, core_np, _ = graph_local.hindex_local(
-                *arrs, iters=iters, until_fixpoint=until_fixpoint,
-                max_rounds=max_rounds)
-            return edges.sparkSession.createDataFrame(
-                pd.DataFrame({"node": nodes_np, "coreness": core_np}),
-                "node bigint, coreness bigint")
+        local = _replayed(edges, lambda src, dst: graph_local.hindex_local(
+            src, dst, iters=iters, until_fixpoint=until_fixpoint,
+            max_rounds=max_rounds), "node bigint, coreness bigint")
+        if local is not None:
+            return local
     # hash-partitioned by src before the checkpoint: the per-round
     # window (partitionBy src), the h-index aggregate (groupBy src) and
     # the degree init all reuse it — one exchange for the whole loop
@@ -851,31 +766,15 @@ def hindex_coreness(edges: DataFrame, iters: int = 3,
                                    F.col("__nv"))).alias("val"))
                 .localCheckpoint())
 
-    rounds = 0
-    if until_fixpoint:
-        while True:
-            if rounds >= max_rounds:
-                raise RuntimeError(
-                    f"hindex_coreness did not converge in {max_rounds} "
-                    "rounds (monotone integer descent: raise max_rounds)")
-            new = _round(vals)
-            rounds += 1
-            changed = (new.alias("n").join(vals.alias("o"), "node")
-                       .filter(F.expr("n.val <> o.val")).count())
-            vals.unpersist(False)
-            vals = new
-            if changed == 0:
-                break
-        # converged vals are materialized; release the edge expansion
-        # (the fixed-iters branch returns a lazy plan over `both`)
-        both.unpersist(False)
-    else:
-        for _ in range(iters):
-            prev = vals
-            vals = _round(vals)
-            rounds += 1
-            prev.unpersist(False)
-        both.unpersist(False)
+    vals, rounds = graph_local.fixpoint(
+        vals, _round, iters=iters, until_fixpoint=until_fixpoint,
+        max_rounds=max_rounds, release=_unpersist,
+        changed=lambda new, old: (
+            new.alias("n").join(old.alias("o"), "node")
+            .filter(F.expr("n.val <> o.val")).count() > 0),
+        what=graph_local.HINDEX_GUARD.format(max_rounds=max_rounds))
+    # the values are materialized; release the edge expansion
+    both.unpersist(False)
     if rounds_out is not None:
         rounds_out.append(rounds)
     return vals.select("node", F.col("val").alias("coreness"))
@@ -898,10 +797,10 @@ def label_propagation(edges: DataFrame, iters: int = 2,
     fixed and small (community structure stabilizes in a few rounds;
     this is the bounded-iteration convention of graph.pagerank).
 
-    ``until_fixpoint=True`` runs the IDENTICAL round until no node
-    changes label (a per-round join-on-node + ``count()`` of changed
-    rows — one scalar off two localCheckpointed one-row-per-node
-    tables), bounded by ``max_rounds``.  Synchronous LPA can in theory
+    ``until_fixpoint=True`` runs the IDENTICAL round under
+    :func:`graph_local.fixpoint` until no node changes label (a
+    per-round join-on-node + ``count()`` of changed rows over two
+    localCheckpointed one-row-per-node tables).  Synchronous LPA can
     2-cycle on bipartite-ish structure, so non-termination raises at
     ``max_rounds`` instead of returning a non-fixpoint; deterministic
     min-label tie-breaks make oscillation rare in practice (and absent
@@ -912,6 +811,14 @@ def label_propagation(edges: DataFrame, iters: int = 2,
 
     Returns ``(node, label)`` after ``iters`` rounds (or the fixpoint).
     """
+    # small path: the count+argmax rounds are integer-only, so the
+    # replay is exact; ``rounds_out`` asks for the distributed contract
+    if rounds_out is None:
+        local = _replayed(edges, lambda src, dst: graph_local.lpa_local(
+            src, dst, iters=iters, until_fixpoint=until_fixpoint,
+            max_rounds=max_rounds), "node bigint, label bigint")
+        if local is not None:
+            return local
     # materialize the directed expansion ONCE: it feeds the label init
     # plus one join per round, and without the checkpoint each of those
     # subtrees re-executes the full upstream edge derivation (the
@@ -926,23 +833,6 @@ def label_propagation(edges: DataFrame, iters: int = 2,
     # on the co-purchase gate vs the unpartitioned checkpoint; a
     # round-robin repartition at the same width shows no such win, so
     # it is the KEY, not the parallelism).
-    # bounded small path (the wcc/pagerank discipline): exact in-driver
-    # replay of the count+argmax rounds — integer-only, so equality with
-    # the distributed loop is exact by construction; skipped when
-    # ``rounds_out`` requests the distributed iteration contract
-    if rounds_out is None:
-        from hazelcast_jet_spark.operators import graph_local
-
-        arrs = graph_local.collect_int_edges(edges)
-        if arrs is not None:
-            import pandas as pd
-
-            nodes_np, labels_np, _ = graph_local.lpa_local(
-                *arrs, iters=iters, until_fixpoint=until_fixpoint,
-                max_rounds=max_rounds)
-            return edges.sparkSession.createDataFrame(
-                pd.DataFrame({"node": nodes_np, "label": labels_np}),
-                "node bigint, label bigint")
     both = edges.select("src", "dst").unionAll(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).repartition(F.col("src")).localCheckpoint()
@@ -958,39 +848,30 @@ def label_propagation(edges: DataFrame, iters: int = 2,
         # keeps the smallest-label tie-break correct for ANY orderable
         # label type — negating the label itself silently cast string
         # node ids to NULL and broke determinism (ADVICE r8)
-        return (nbr.groupBy("node")
-                .agg(F.min_by("label",
-                              F.struct((-F.col("__c")).alias("__nc"),
-                                       F.col("label")))
-                     .alias("label")))
+        new = (nbr.groupBy("node")
+               .agg(F.min_by("label",
+                             F.struct((-F.col("__c")).alias("__nc"),
+                                      F.col("label")))
+                    .alias("label")))
+        # fixed rounds stay a LAZY chain; fixpoint rounds are
+        # materialized so the change probe reads them
+        return new.localCheckpoint(eager=True) if until_fixpoint else new
 
-    rounds = 0
     if until_fixpoint:
         labels = labels.localCheckpoint(eager=True)
-        while True:
-            if rounds >= max_rounds:
-                raise RuntimeError(
-                    f"label_propagation did not stabilize in {max_rounds} "
-                    "rounds (synchronous LPA can oscillate; raise "
-                    "max_rounds or use the fixed-iters form)")
-            new = _round(labels).localCheckpoint(eager=True)
-            rounds += 1
-            changed = (new.alias("n")
-                       .join(labels.alias("o"), "node")
-                       .filter(F.expr("n.label <> o.label"))
-                       .count())
-            labels.unpersist(False)
-            labels = new
-            if changed == 0:
-                break
+    labels, rounds = graph_local.fixpoint(
+        labels, _round, iters=iters, until_fixpoint=until_fixpoint,
+        max_rounds=max_rounds,
+        release=_unpersist if until_fixpoint else None,
+        changed=lambda new, old: (
+            new.alias("n").join(old.alias("o"), "node")
+            .filter(F.expr("n.label <> o.label")).count() > 0),
+        what=graph_local.LPA_GUARD.format(max_rounds=max_rounds))
+    if until_fixpoint:
         # fixpoint labels are materialized, so the edge expansion's
-        # checkpoint blocks can be released here; the fixed-iters branch
+        # checkpoint blocks can be released here; the fixed-iters form
         # returns a LAZY plan over `both` and must keep them
         both.unpersist(False)
-    else:
-        for _ in range(iters):
-            labels = _round(labels)
-            rounds += 1
     if rounds_out is not None:
         rounds_out.append(rounds)
     return labels
@@ -1021,8 +902,8 @@ def wcc(edges: DataFrame, max_rounds: int = 50,
     set (two distinct-``EXCEPT`` probes per round, each over the
     star-shrunk edge list); star graphs rooted at component minima are
     the unique fixpoint (Kiveris et al., Lemma 3).  Each round
-    ``localCheckpoint``\\ s (O(1) lineage) and unpersists its
-    predecessor, the :func:`pagerank` loop discipline.
+    ``localCheckpoint``\\ s (O(1) lineage); :func:`graph_local.fixpoint`
+    runs the rounds and raises at ``max_rounds``.
 
     Returns ``(node, component)`` — component = min node id reachable,
     bit-identical to ``pairs_to_groups``' converged labeling (both are
@@ -1046,14 +927,11 @@ def wcc(edges: DataFrame, max_rounds: int = 50,
     # for the distributed contraction contract (tests pin its round
     # counts).
     if rounds_out is None:
-        from hazelcast_jet_spark.operators import graph_local
         from hazelcast_jet_spark.operators.dedup import (
             _PAIRS_COLLECT_THRESHOLD)
 
         tbl = graph_local.bounded_arrow(e0, _PAIRS_COLLECT_THRESHOLD)
         if tbl is not None:
-            import pandas as pd
-
             nodes_l, comps_l = graph_local.min_root_components(tbl)
             return edges.sparkSession.createDataFrame(
                 pd.DataFrame({"node": nodes_l, "component": comps_l},
@@ -1094,27 +972,23 @@ def wcc(edges: DataFrame, max_rounds: int = 50,
                 .filter(F.col("src") != F.col("dst"))
                 .dropDuplicates(["src", "dst"]))
 
-    rounds = 0
-    prev_n = e.count()  # the one edge count: a cached-scan scalar
-    while True:
-        if rounds >= max_rounds:
-            raise RuntimeError(
-                f"wcc did not reach the star fixpoint in {max_rounds} "
-                "rounds (O(log n) expected: raise max_rounds)")
-        new = _small_star(_large_star(e)).localCheckpoint()
-        rounds += 1
-        # both sides are DEDUPED sets, so |new| == |e| plus ONE empty
+    sizes = [e.count()]  # the one edge count: a cached-scan scalar
+
+    def _changed(new: DataFrame, old: DataFrame) -> bool:
+        # both sides are DEDUPED sets, so |new| == |old| plus ONE empty
         # set-difference proves equality — the count is a cached-RDD
         # scalar, so most rounds skip the exceptAll probe entirely and
         # the confirming round pays one anti-join instead of two
-        n = new.count()
-        changed = (new.exceptAll(e).limit(1).count()
-                   if n == prev_n else 1)
-        e.unpersist(False)
-        e = new
-        prev_n = n
-        if changed == 0:
-            break
+        sizes.append(new.count())
+        return (sizes[-1] != sizes[-2]
+                or new.exceptAll(old).limit(1).count() > 0)
+
+    e, rounds = graph_local.fixpoint(
+        e, lambda cur: _small_star(_large_star(cur)).localCheckpoint(),
+        until_fixpoint=True, max_rounds=max_rounds, changed=_changed,
+        release=_unpersist,
+        what=f"wcc did not reach the star fixpoint in {max_rounds} "
+             "rounds (O(log n) expected: raise max_rounds)")
     out = (nodes.join(e.select(F.col("src").alias("node"),
                                F.col("dst").alias("__c")), "node", "left")
            .select("node", F.coalesce("__c", "node").alias("component")))
@@ -1155,31 +1029,19 @@ def khop_reach(edges: DataFrame, max_degree: int = 256,
                           F.greatest("src", "dst").alias("dst"))
              .filter(F.col("src") != F.col("dst"))
              .distinct())
-    # bounded small path (the pagerank discipline): integer-only wedge
-    # counting, exact by construction; the expansion ratio reuses the
-    # identical Spark expression on the returned local table; the probe
-    # runs the canonicalizing distinct, so the collected pairs are
-    # exactly the ``canon`` set the distributed plan iterates.  The
+    expansion = (F.round(F.col("reach2").cast("double")
+                         / F.col("degree").cast("double"),
+                         round_digits) + F.lit(0.0)).alias("expansion")
+    # small path: integer-only wedge counting, exact by construction;
+    # the probe runs the canonicalizing distinct, so the collected pairs
+    # are exactly the ``canon`` set the distributed plan iterates.  The
     # replay declines (None) when its wedge work is over its bound.
-    from hazelcast_jet_spark.operators import graph_local
-
-    arrs = graph_local.collect_int_edges(canon)
-    local = (graph_local.khop_local(*arrs, max_degree=max_degree)
-             if arrs is not None else None)
+    local = _replayed(canon, lambda src, dst: graph_local.khop_local(
+        src, dst, max_degree=max_degree),
+        "node bigint, degree bigint, reach2 bigint")
     if local is not None:
-        import pandas as pd
-
-        nodes_np, deg_np, reach_np = local
-        loc = edges.sparkSession.createDataFrame(
-            pd.DataFrame({"node": nodes_np, "degree": deg_np,
-                          "reach2": reach_np}),
-            "node bigint, degree bigint, reach2 bigint")
-        return (loc.select(
-            "node", "degree", "reach2",
-            (F.round(F.col("reach2").cast("double")
-                     / F.col("degree").cast("double"),
-                     round_digits) + F.lit(0.0)).alias("expansion"))
-            .orderBy(F.desc("reach2"), "node"))
+        return (local.select("node", "degree", "reach2", expansion)
+                .orderBy(F.desc("reach2"), "node"))
     both = canon.unionAll(
         canon.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     # feeds degrees + both wedge legs; hash(src) so the degree aggregate
@@ -1202,10 +1064,7 @@ def khop_reach(edges: DataFrame, max_degree: int = 256,
     reach = (two.unionAll(one).distinct()
              .groupBy("node").agg(F.count(F.lit(1)).alias("reach2")))
     return (deg.join(reach, "node")
-            .select("node", "degree", "reach2",
-                    (F.round(F.col("reach2").cast("double")
-                             / F.col("degree").cast("double"),
-                             round_digits) + F.lit(0.0)).alias("expansion"))
+            .select("node", "degree", "reach2", expansion)
             .orderBy(F.desc("reach2"), "node"))
 
 
@@ -1438,12 +1297,13 @@ def hits(edges: DataFrame, iters: int = 2,
     the same eigenvector direction, a different (deterministic) scale,
     with the top hub/authority pinned at exactly 1.0.
 
-    Plan shape (the :func:`pagerank` discipline): the edge list
-    localCheckpoints once; each half-step is ONE keyed equi-join plus
-    one thin aggregate with DECIMAL(28,18)-accumulated contribution
-    sums (order-free); the normalizing max is a one-row broadcast.
-    Score tables are one row per node and localCheckpoint each round
-    (O(1) lineage).
+    Plan shape: the edge list localCheckpoints once; each half-step is
+    ONE keyed equi-join plus one thin aggregate with
+    DECIMAL(28,18)-accumulated contribution sums (order-free); the
+    normalizing max is a global-window max.  Score tables are one row
+    per node and localCheckpoint each round (O(1) lineage); the rounds
+    run under :func:`graph_local.fixpoint` with ``(auths, hubs)`` as
+    the state.
 
     Returns ``(side, node, score)`` — side ∈ {'hub', 'auth'}.
     """
@@ -1464,12 +1324,15 @@ def hits(edges: DataFrame, iters: int = 2,
     # DECIMAL(28,18) sums, same IEEE max/divide; rounding stays in Spark.
     # The probe collects the DEDUPED edges; their order is irrelevant
     # (exact integer sums, exact max)
-    from hazelcast_jet_spark.operators import graph_local
-
+    # round_digits=None emits the raw doubles: every score is already a
+    # fixed chain of IEEE ops, and L∞ ratios CAN land on exact binary
+    # rationals (2^-k) where decimal rounding hits the engines'
+    # halfway-rule divergence — exactness prefers no rounding at all
+    score = (F.col("score") if round_digits is None
+             else F.round("score", round_digits))
+    score = (score + F.lit(0.0)).alias("score")
     arrs = graph_local.collect_int_edges(deduped)
     if arrs is not None:
-        import pandas as pd
-
         s_nodes, hub_s, d_nodes, auth_s = graph_local.hits_local(
             *arrs, iters=iters)
         pdf = pd.DataFrame({
@@ -1478,10 +1341,7 @@ def hits(edges: DataFrame, iters: int = 2,
             "score": list(hub_s) + list(auth_s)})
         out = edges.sparkSession.createDataFrame(
             pdf, "side string, node bigint, score double")
-        score = (F.col("score") if round_digits is None
-                 else F.round("score", round_digits))
-        return out.select("side", "node",
-                          (score + F.lit(0.0)).alias("score"))
+        return out.select("side", "node", score)
     e_dst = deduped.repartition(F.col("dst")).localCheckpoint()
     e_src = e_dst.repartition(F.col("src")).localCheckpoint()
     hubs = (e_src.select(F.col("src").alias("node")).distinct()
@@ -1505,22 +1365,18 @@ def hits(edges: DataFrame, iters: int = 2,
         return (raw.select("node", (F.col("__raw") / mx).alias("score"))
                 .localCheckpoint())
 
-    auths = None
-    for _ in range(iters):
-        prev_a, prev_h = auths, hubs
-        auths = _half(hubs, "src", "dst")
-        hubs = _half(auths, "dst", "src")
-        for p in (prev_a, prev_h):
+    def _round(state: tuple) -> tuple:
+        auths = _half(state[1], "src", "dst")
+        return auths, _half(auths, "dst", "src")
+
+    def _release(state: tuple) -> None:
+        for p in state:
             if p is not None:
                 p.unpersist(False)
+
+    (auths, hubs), _ = graph_local.fixpoint(
+        (None, hubs), _round, iters=iters, release=_release)
     out = (hubs.select(F.lit("hub").alias("side"), "node", "score")
            .unionAll(auths.select(F.lit("auth").alias("side"),
                                   "node", "score")))
-    # round_digits=None emits the raw doubles: every score is already a
-    # fixed chain of IEEE ops, and L∞ ratios CAN land on exact binary
-    # rationals (2^-k) where decimal rounding hits the engines'
-    # halfway-rule divergence — exactness prefers no rounding at all
-    score = (F.col("score") if round_digits is None
-             else F.round("score", round_digits))
-    return out.select("side", "node",
-                      (score + F.lit(0.0)).alias("score"))
+    return out.select("side", "node", score)

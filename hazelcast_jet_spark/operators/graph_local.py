@@ -60,6 +60,18 @@ GRAPH_COLLECT_THRESHOLD = int(os.environ.get(
 #: transient arrays, at the default edge bound).
 KHOP_WEDGES_PER_EDGE = 4
 
+#: the round-budget error of each iterative operator, shared by its
+#: distributed loop and its driver replay (``str.format`` fills them)
+PAGERANK_GUARD = ("pagerank did not converge to tol={tol} in {max_rounds} "
+                  "rounds (raise max_rounds or loosen tol)")
+LPA_GUARD = ("label_propagation did not stabilize in {max_rounds} rounds "
+             "(synchronous LPA can oscillate; raise max_rounds or use the "
+             "fixed-iters form)")
+KCORE_GUARD = ("kcore_peel did not reach fixpoint in {max_rounds} rounds "
+               "(monotone peel: raise max_rounds)")
+HINDEX_GUARD = ("hindex_coreness did not converge in {max_rounds} rounds "
+                "(monotone integer descent: raise max_rounds)")
+
 _E18 = Decimal("1e-18")
 _SCALE = 10 ** 18
 
@@ -135,6 +147,35 @@ def min_root_components(tbl):
     return nodes, [_find(n) for n in nodes]
 
 
+def fixpoint(state, step, *, iters: int = 0, until_fixpoint: bool = False,
+             max_rounds: int = 64, changed=None, release=None,
+             what: str = ""):
+    """The one round loop of the iterative graph operators, distributed
+    and driver-local alike.  ``step(state)`` runs one round.  The fixed
+    form runs ``iters`` rounds; ``until_fixpoint`` runs until
+    ``changed(new, old)`` is false, and raises ``RuntimeError(what)``
+    rather than start a round past ``max_rounds``.  ``release(old)``
+    runs after every round, after ``changed``.  Returns ``(state,
+    rounds)``, the confirming no-change round included."""
+    rounds = 0
+    while until_fixpoint or rounds < iters:
+        if until_fixpoint and rounds >= max_rounds:
+            raise RuntimeError(what)
+        new = step(state)
+        rounds += 1
+        moved = until_fixpoint and changed(new, state)
+        if release is not None:
+            release(state)
+        state = new
+        if until_fixpoint and not moved:
+            break
+    return state, rounds
+
+
+def _any_differs(new, old) -> bool:
+    return bool((new != old).any())
+
+
 def _dec18(x) -> int:
     """Spark's ``cast(double AS decimal(28,18))`` as a scale-18 integer.
     ``float(x)`` first: CPython's ``repr(float)`` is the shortest
@@ -193,12 +234,13 @@ def _decimal_sum_to_double(totals):
 
 
 def pagerank_local(src, dst, iters: int, damping: float,
-                   until_fixpoint: bool = False, tol: float | None = None,
-                   max_rounds: int = 64, seeds=None):
+                   until_fixpoint: bool = False,
+                   tol: float = 0.5 * 10.0 ** (-9), max_rounds: int = 64,
+                   seeds=None):
     """Driver replay of graph.pagerank / personalized_pagerank's round
     body.  ``seeds``: None for uniform pagerank; else a numpy int64
     array of seed node ids (PPR).  Returns (nodes int64 array,
-    ranks float64 array, rounds executed)."""
+    ranks float64 array)."""
     import numpy as np
 
     s_all = np.concatenate([src, dst])
@@ -237,34 +279,19 @@ def pagerank_local(src, dst, iters: int, damping: float,
         contrib = _decimal_sum_to_double(totals)
         return base + damping * contrib       # lit(base) + lit(d) * __in
 
-    rounds = 0
-    if until_fixpoint:
-        if tol is None:
-            tol = 0.5 * 10.0 ** (-9)
-        while True:
-            if rounds >= max_rounds:
-                raise RuntimeError(
-                    f"pagerank did not converge to tol={tol} in "
-                    f"{max_rounds} rounds (raise max_rounds or loosen "
-                    "tol)")
-            new = _round(rank)
-            rounds += 1
-            moving = int((np.abs(new - rank) > tol).sum())
-            rank = new
-            if moving == 0:
-                break
-    else:
-        for _ in range(iters):
-            rank = _round(rank)
-            rounds += 1
-    return nodes, rank, rounds
+    rank, _ = fixpoint(
+        rank, _round, iters=iters, until_fixpoint=until_fixpoint,
+        max_rounds=max_rounds,
+        changed=lambda new, old: bool((np.abs(new - old) > tol).any()),
+        what=PAGERANK_GUARD.format(tol=tol, max_rounds=max_rounds))
+    return nodes, rank
 
 
 def lpa_local(src, dst, iters: int, until_fixpoint: bool = False,
               max_rounds: int = 64):
     """Driver replay of graph.label_propagation: per round each node
     adopts its neighbors' most frequent label, ties to the SMALLEST
-    label.  Returns (nodes, labels, rounds) — exact integers only."""
+    label.  Returns (nodes, labels) — exact integers only."""
     import numpy as np
 
     s_all = np.concatenate([src, dst])
@@ -300,31 +327,17 @@ def lpa_local(src, dst, iters: int, until_fixpoint: bool = False,
         out[cn[first]] = label_i[cand[first]]
         return out
 
-    rounds = 0
-    if until_fixpoint:
-        while True:
-            if rounds >= max_rounds:
-                raise RuntimeError(
-                    f"label_propagation did not stabilize in {max_rounds} "
-                    "rounds (synchronous LPA can oscillate; raise "
-                    "max_rounds or use the fixed-iters form)")
-            new = _round(lab_idx)
-            rounds += 1
-            changed = int((new != lab_idx).sum())
-            lab_idx = new
-            if changed == 0:
-                break
-    else:
-        for _ in range(iters):
-            lab_idx = _round(lab_idx)
-            rounds += 1
-    return nodes, nodes[lab_idx], rounds
+    lab_idx, _ = fixpoint(
+        lab_idx, _round, iters=iters, until_fixpoint=until_fixpoint,
+        max_rounds=max_rounds, changed=_any_differs,
+        what=LPA_GUARD.format(max_rounds=max_rounds))
+    return nodes, nodes[lab_idx]
 
 
 def kcore_local(src, dst, k: int, iters: int,
                 until_fixpoint: bool = False, max_rounds: int = 64):
-    """Driver replay of graph.kcore_peel.  Returns (nodes, degrees,
-    rounds) for the surviving subgraph — exact integers only."""
+    """Driver replay of graph.kcore_peel.  Returns (nodes, degrees) for
+    the surviving subgraph — exact integers only."""
     import numpy as np
 
     # index the node space ONCE; each peel round is two bincounts and a
@@ -333,43 +346,32 @@ def kcore_local(src, dst, k: int, iters: int,
     n = len(all_nodes)
     i_s = np.searchsorted(all_nodes, src)
     i_d = np.searchsorted(all_nodes, dst)
-    rounds = 0
 
-    def _peel(is_, id_):
+    def _peel(cur):
+        is_, id_ = cur
         degv = (np.bincount(is_, minlength=n)
                 + np.bincount(id_, minlength=n))
         alive = degv >= k
         keep = alive[is_] & alive[id_]
         return is_[keep], id_[keep]
 
-    if until_fixpoint:
-        prev = len(i_s)
-        while True:
-            if rounds >= max_rounds:
-                raise RuntimeError(
-                    f"kcore_peel did not reach fixpoint in {max_rounds} "
-                    "rounds (monotone peel: raise max_rounds)")
-            i_s, i_d = _peel(i_s, i_d)
-            rounds += 1
-            cur = len(i_s)
-            if cur == prev:
-                break
-            prev = cur
-    else:
-        for _ in range(iters):
-            i_s, i_d = _peel(i_s, i_d)
-            rounds += 1
+    # edge-count-stable == no node dropped (see graph.kcore_peel)
+    (i_s, i_d), _ = fixpoint(
+        (i_s, i_d), _peel, iters=iters, until_fixpoint=until_fixpoint,
+        max_rounds=max_rounds,
+        changed=lambda new, old: len(new[0]) != len(old[0]),
+        what=KCORE_GUARD.format(max_rounds=max_rounds))
     deg = (np.bincount(i_s, minlength=n)
            + np.bincount(i_d, minlength=n)).astype(np.int64)
     keepn = deg > 0
-    return all_nodes[keepn], deg[keepn], rounds
+    return all_nodes[keepn], deg[keepn]
 
 
 def hindex_local(src, dst, iters: int, until_fixpoint: bool = False,
                  max_rounds: int = 64):
     """Driver replay of graph.hindex_coreness: every node starts at its
     degree; each round its value becomes the h-index of its neighbors'
-    values.  Returns (nodes, coreness, rounds) — exact integers."""
+    values.  Returns (nodes, coreness) — exact integers."""
     import numpy as np
 
     s_all = np.concatenate([src, dst])
@@ -401,24 +403,11 @@ def hindex_local(src, dst, iters: int, until_fixpoint: bool = False,
         out[seg_nodes] = h
         return out
 
-    rounds = 0
-    if until_fixpoint:
-        while True:
-            if rounds >= max_rounds:
-                raise RuntimeError(
-                    f"hindex_coreness did not converge in {max_rounds} "
-                    "rounds (monotone integer descent: raise max_rounds)")
-            new = _round(vals)
-            rounds += 1
-            changed = int((new != vals).sum())
-            vals = new
-            if changed == 0:
-                break
-    else:
-        for _ in range(iters):
-            vals = _round(vals)
-            rounds += 1
-    return nodes, vals, rounds
+    vals, _ = fixpoint(
+        vals, _round, iters=iters, until_fixpoint=until_fixpoint,
+        max_rounds=max_rounds, changed=_any_differs,
+        what=HINDEX_GUARD.format(max_rounds=max_rounds))
+    return nodes, vals
 
 
 def khop_local(src, dst, max_degree: int):
@@ -485,8 +474,6 @@ def hits_local(src, dst, iters: int):
 
     s_nodes, s_inv = np.unique(src, return_inverse=True)
     d_nodes, d_inv = np.unique(dst, return_inverse=True)
-    hubs = np.ones(len(s_nodes), dtype=np.float64)
-    auths = None
     lay_d = _SegLayout(d_inv, len(d_nodes))
     lay_s = _SegLayout(s_inv, len(s_nodes))
     take_sd = s_inv[lay_d.perm]  # hub scores gathered into dst order
@@ -499,7 +486,11 @@ def hits_local(src, dst, iters: int):
         raw = _decimal_sum_to_double(totals)
         return raw / raw.max()
 
-    for _ in range(iters):
-        auths = _half(hubs, take_sd, lay_d)
-        hubs = _half(auths, take_ds, lay_s)
+    def _round(state):
+        auths = _half(state[1], take_sd, lay_d)
+        return auths, _half(auths, take_ds, lay_s)
+
+    (auths, hubs), _ = fixpoint(
+        (None, np.ones(len(s_nodes), dtype=np.float64)), _round,
+        iters=iters)
     return s_nodes, hubs, d_nodes, auths

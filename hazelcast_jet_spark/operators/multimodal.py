@@ -44,12 +44,6 @@ FEATURE_SCHEMA = StructType([
 ])
 
 
-def read_binary_files(spark, path: str) -> DataFrame:
-    """Raw-bytes file source — RawBytesFileFormat.java analog:
-    spark.read.format('binaryFile')."""
-    return spark.read.format("binaryFile").load(path)
-
-
 def decode_image(payload: bytes) -> "object":
     """Decode an image payload: binary PPM decodes for real
     (:func:`decode_ppm`); compressed formats raise — their codecs

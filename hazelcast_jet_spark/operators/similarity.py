@@ -154,16 +154,6 @@ def dequantize_int8(qstruct: Column) -> Column:
     return F.transform(qstruct["q"], lambda q: q.cast("double") * qstruct["scale"])
 
 
-def hyperplane_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane LSH signature: bit i = sign(vec · plane_i).
-    Planes are fixed literals (deterministic, seedable by caller)."""
-    bits = [
-        F.when(dot(vec, F.array(*[F.lit(float(x)) for x in p])) >= 0, F.lit("1")).otherwise(F.lit("0"))
-        for p in planes
-    ]
-    return F.concat(*bits)
-
-
 def banded_hyperplanes(num_bands: int, planes_per_band: int, dim: int,
                        seed: int = 7) -> list[list[list[float]]]:
     """Deterministic ±1 hyperplanes for a banded OR-construction: returns

@@ -722,74 +722,6 @@ def ngram_novelty(df: DataFrame, id_col: str = "doc_id",
         )
     )
 
-def pmi_collocations(df: DataFrame, text_col: str = "text",
-                     min_count: int = 5,
-                     round_digits: int = 6) -> DataFrame:
-    """Corpus-level collocation mining: adjacent word pairs ranked by
-    pointwise mutual information,
-
-        PMI(w1,w2) = ln( (c12/N2) / ((c1/N1) * (c2/N1)) )
-
-    with MLE estimates over the whole corpus (c12 = bigram count, N2 =
-    total bigrams, c = unigram counts, N1 = total unigrams).  High-PMI
-    pairs are phrases whose words co-occur far above chance ("los
-    angeles") — the classic phrase-detection signal (Church & Hanks
-    1990) used to build multi-word vocabulary entries for tokenizers.
-    No reference analog (beyond-inventory text op).
-
-    ``min_count`` prunes rare bigrams BEFORE the joins (PMI is noisy and
-    maximal for hapax pairs; pruning also bounds the join build side).
-
-    Scale shape: the gram stream is map-only (zip-shift
-    :func:`word_ngrams`); unigram and bigram count tables are
-    vocabulary-bounded aggregates; totals come from unpartitioned
-    windows over those tiny tables (never a driver round-trip); the two
-    unigram joins are broadcast.  Nothing scales with corpus rows except
-    the two counting aggregates, both map-side combined.
-
-    Determinism: probabilities are double quotients of exact integers in
-    a FIXED expression order, ``ln`` is correctly-rounded on every
-    engine probed, and the result is rounded — hashes identically
-    against a SQL oracle.
-
-    Returns ``(bigram, w1, w2, n_pair BIGINT, pmi DOUBLE)``.
-    """
-    from pyspark.sql.window import Window
-
-    toks = df.select(F.split(normalize_text(text_col), " ").alias("__t"))
-    uni = (
-        toks.select(F.explode("__t").alias("w"))
-        .filter(F.col("w") != "")
-        .groupBy("w").agg(F.count(F.lit(1)).alias("__c_u"))
-    )
-    allw = Window.partitionBy()  # vocabulary-sized: one tiny partition
-    uni = uni.withColumn("__n_uni", F.sum("__c_u").over(allw))
-    bg = (
-        toks.filter(F.size("__t") >= 2)
-        .select(F.explode(word_ngrams("__t", 2)).alias("bigram"))
-        .groupBy("bigram").agg(F.count(F.lit(1)).alias("n_pair"))
-    )
-    bg = bg.withColumn("__n_bg", F.sum("n_pair").over(allw))
-    bg = (
-        bg.filter(F.col("n_pair") >= min_count)
-        .withColumn("w1", F.substring_index("bigram", " ", 1))
-        .withColumn("w2", F.substring_index("bigram", " ", -1))
-    )
-    u1 = uni.select(F.col("w").alias("w1"), F.col("__c_u").alias("__c1"),
-                    "__n_uni")
-    u2 = uni.select(F.col("w").alias("w2"), F.col("__c_u").alias("__c2"))
-    pmi = F.log(
-        (F.col("n_pair").cast("double") / F.col("__n_bg"))
-        / ((F.col("__c1").cast("double") / F.col("__n_uni"))
-           * (F.col("__c2").cast("double") / F.col("__n_uni")))
-    )
-    return (
-        bg.join(F.broadcast(u1), "w1")
-        .join(F.broadcast(u2), "w2")
-        .select("bigram", "w1", "w2", "n_pair",
-                F.round(pmi, round_digits).alias("pmi"))
-    )
-
 
 def bm25_scores(df: DataFrame, query_terms: list[str],
                 id_col: str = "doc_id", text_col: str = "text",

@@ -741,51 +741,6 @@ def seasonal_decompose(df: DataFrame, key_col: str, time_col: str,
     )
 
 
-def ohlc_bars(df: DataFrame, key_col: str, time_col: str, value_col: str,
-              id_col: str, bar_seconds: int = 3600) -> DataFrame:
-    """Fixed-width OHLC time bars per key: open/high/low/close, event
-    count and an exact value sum per ``bar_seconds`` bucket — the
-    market-data (and metric-downsampling) summary shape.  No reference
-    analog: Jet expresses this as a tumbling window with an allOf
-    aggregate (AggregateOperations.java:1519 + WindowDefinition.java:119);
-    batch Spark expresses it as ONE hash aggregate.
-
-    Open/close are selected by ``min_by``/``max_by`` over a
-    ``(time, id)`` order struct, so ties on the timestamp resolve
-    deterministically by ``id_col`` — the same total order an oracle's
-    ``row_number() OVER (ORDER BY time, id)`` uses.  The value sum
-    accumulates in DECIMAL(28,6) (order-independent, engine-portable)
-    and surfaces as double.
-
-    Plan: bar assignment is a map-only epoch floor; the single groupBy
-    on ``(key, bar)`` is the only exchange, with map-side partials for
-    every aggregate (min_by/max_by partials carry one (order, value)
-    pair each).  State per group is O(1) — this scales to any corpus.
-
-    Returns ``(key, bar_start BIGINT epoch-seconds, open, high, low,
-    close, n_events BIGINT, value_sum DOUBLE)``.
-    """
-    ep = _epoch_seconds(df, time_col)
-    bar = (F.floor(ep / F.lit(bar_seconds)) * bar_seconds).cast("bigint")
-    order = F.struct(F.col(time_col), F.col(id_col))
-    v = F.col(value_col).cast("double")
-    return (
-        df.select(
-            F.col(key_col), bar.alias("bar_start"),
-            v.alias("__v"), order.alias("__o"))
-        .groupBy(key_col, "bar_start")
-        .agg(
-            F.min_by("__v", "__o").alias("open"),
-            F.max("__v").alias("high"),
-            F.min("__v").alias("low"),
-            F.max_by("__v", "__o").alias("close"),
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("__v").cast("decimal(28,6)"))
-            .cast("double").alias("value_sum"),
-        )
-    )
-
-
 def scd2_intervals(df: DataFrame, key_col: str, time_col: str,
                    state_col: str, id_col: str) -> DataFrame:
     """Slowly-changing-dimension (type 2) interval builder from a change

@@ -85,8 +85,11 @@ def test_pagerank_uniform_is_exact_fixpoint(spark):
     assert all(r[1] == pytest.approx(1.0 / 6.0) for r in fix)
 
 
-def test_fixpoint_max_rounds_guard(spark):
+def test_fixpoint_max_rounds_guard(spark, monkeypatch):
     """Hitting max_rounds raises instead of returning a non-fixpoint."""
+    from hazelcast_jet_spark.operators import dedup
+    from hazelcast_jet_spark.operators.graph import hindex_coreness
+
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(8)], "src INT, dst INT")
     with pytest.raises(RuntimeError, match="fixpoint"):
@@ -95,6 +98,15 @@ def test_fixpoint_max_rounds_guard(spark):
         label_propagation(path, until_fixpoint=True, max_rounds=1)
     with pytest.raises(RuntimeError, match="converge"):
         pagerank(path, until_fixpoint=True, tol=1e-15, max_rounds=1)
+    # the ends' neighbours fall from degree 2 to h-index 1 in round one
+    with pytest.raises(RuntimeError, match="converge"):
+        hindex_coreness(path, until_fixpoint=True, max_rounds=1)
+    # the distributed min-label loop: round one still relabels the chain
+    monkeypatch.setattr(dedup, "_PAIRS_COLLECT_THRESHOLD", 0)
+    with pytest.raises(RuntimeError, match="fixpoint"):
+        dedup.pairs_to_groups(path.select(F.col("src").alias("id_a"),
+                                          F.col("dst").alias("id_b")),
+                              max_iter=1)
 
 
 def test_fixed_round_paths_unchanged(copurchase_edges):

@@ -17,7 +17,7 @@ from hazelcast_jet_spark.operators.graph import (hindex_coreness, hits,
                                                  kcore_peel, khop_reach,
                                                  label_propagation,
                                                  pagerank,
-                                                 personalized_pagerank)
+                                                 personalized_pagerank, wcc)
 
 
 @pytest.fixture(scope="module")
@@ -258,6 +258,60 @@ def test_small_path_is_one_job(spark, tmp_path, name):
     n = _jobs_fired(spark, lambda: out.append(getattr(graph, name)(e)),
                     f"small-path-jobs-{name}")
     assert n == 1
+    assert out[0].count() > 0
+
+
+def _pairs_to_groups(e):
+    from hazelcast_jet_spark.operators.dedup import pairs_to_groups
+
+    return pairs_to_groups(e.select(F.col("src").alias("id_a"),
+                                    F.col("dst").alias("id_b")))
+
+
+def _ppr(e):
+    seeds = e.sparkSession.createDataFrame([(1,), (10,)], "node long")
+    return personalized_pagerank(e, seeds, iters=3)
+
+
+@pytest.mark.parametrize("build, jobs", [
+    pytest.param(lambda e: pagerank(e, iters=3), 16, id="pagerank-fixed"),
+    # the fixpoint cases of pagerank and lpa run on the K4 and its
+    # bridge: the fixture's hub star is bipartite, where synchronous LPA
+    # 2-cycles and pagerank converges slowly
+    pytest.param(lambda e: pagerank(e.filter("src < 10"),
+                                    until_fixpoint=True, tol=1e-3),
+                 73, id="pagerank-fixpoint"),
+    pytest.param(_ppr, 20, id="ppr"),
+    pytest.param(lambda e: label_propagation(e, iters=2), 2,
+                 id="lpa-fixed"),
+    pytest.param(lambda e: label_propagation(
+        e.filter("src < 10"), until_fixpoint=True), 37, id="lpa-fixpoint"),
+    pytest.param(lambda e: kcore_peel(e, k=2, iters=4), 25,
+                 id="kcore-fixed"),
+    pytest.param(lambda e: kcore_peel(e, k=2, until_fixpoint=True), 27,
+                 id="kcore-fixpoint"),
+    pytest.param(lambda e: hindex_coreness(e, iters=3), 19,
+                 id="hindex-fixed"),
+    pytest.param(lambda e: hindex_coreness(e, until_fixpoint=True), 34,
+                 id="hindex-fixpoint"),
+    pytest.param(lambda e: hits(e, iters=2), 31, id="hits"),
+    pytest.param(wcc, 39, id="wcc"),
+    pytest.param(_pairs_to_groups, 31, id="pairs_to_groups"),
+])
+def test_distributed_path_job_count(spark, edges, monkeypatch, request,
+                                    build, jobs):
+    """Jobs fired while building each iterative operator's distributed
+    result, with the small paths switched off (so no probe runs): the
+    checkpoints, the scalar counts and the convergence probes.  A round
+    loop that gains an eager job shows up here."""
+    from hazelcast_jet_spark.operators import dedup
+
+    monkeypatch.setattr(graph_local, "GRAPH_COLLECT_THRESHOLD", 0)
+    monkeypatch.setattr(dedup, "_PAIRS_COLLECT_THRESHOLD", 0)
+    out = []
+    n = _jobs_fired(spark, lambda: out.append(build(edges)),
+                    f"distributed-jobs-{request.node.callspec.id}")
+    assert n == jobs
     assert out[0].count() > 0
 
 

@@ -123,6 +123,42 @@ def test_aggregate_library(spark):
     assert by_k[2]["mn"] == 5.0 and by_k[2]["mx"] == 5.0
 
 
+_COLLECTION_ROWS = [(1, 3, "c"), (1, 1, "a"), (1, 2, "b"), (1, 1, "d"),
+                    (2, 7, "x"), (2, None, "y"), (3, 4, "z")]
+
+
+def test_collection_aggregates_match_python_model(spark):
+    """bottomN / toSet / toMap / allOf (AggregateOperations.java:333,
+    804, 844, 1337) against a Python model of each, per key."""
+    df = spark.createDataFrame(_COLLECTION_ROWS, "k long, v long, s string")
+    out = {r["k"]: r for r in df.groupBy("k").agg(*agg.all_of(
+        agg.bottom_n(2, "v").alias("bot"),
+        agg.to_set("v").alias("vs"),
+        agg.to_map("s", "v").alias("m"),
+        agg.counting().alias("n"))).collect()}
+    assert set(out) == {1, 2, 3}
+    for k, r in out.items():
+        rows = [(v, s) for kk, v, s in _COLLECTION_ROWS if kk == k]
+        vals = [v for v, _ in rows if v is not None]  # aggregates skip NULL
+        assert r["bot"] == sorted(vals)[:2]
+        assert sorted(r["vs"]) == sorted(set(vals))
+        assert r["m"] == {s: v for v, s in rows}
+        assert r["n"] == len(rows)
+
+
+def test_all_of_global_and_to_map_duplicate_keys(spark):
+    """all_of over a global (keyless) aggregate gives one row; to_map on
+    a repeated key raises (Spark's default map-key dedup policy), like
+    Jet's toMap without a merge function."""
+    df = spark.createDataFrame(_COLLECTION_ROWS, "k long, v long, s string")
+    (r,) = df.agg(*agg.all_of(agg.bottom_n(3, "v").alias("bot"),
+                              agg.to_set("k").alias("ks"))).collect()
+    assert r["bot"] == [1, 1, 2] and sorted(r["ks"]) == [1, 2, 3]
+    dup = df.withColumn("s", F.lit("same"))
+    with pytest.raises(Exception, match="DUPLICATED_MAP_KEY"):
+        dup.groupBy("k").agg(agg.to_map("s", "v")).collect()
+
+
 def test_rolling_aggregate_batch(spark):
     p = Pipeline.create(spark)
     rows = [(1, 1, 1.0), (1, 2, 2.0), (1, 3, 3.0), (2, 1, 5.0)]
