@@ -25,9 +25,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hazelcast_jet_spark.operators.graph_local import (bounded_arrow,
-                                                       fixpoint,
-                                                       min_root_components)
+from hazelcast_jet_spark.operators.graph_local import (
+    bounded_arrow, fixpoint, min_root_components, unpersist_checkpoint)
 from hazelcast_jet_spark.operators.text import normalize_text
 from hazelcast_jet_spark.session import ensure_parallelism
 
@@ -1030,7 +1029,7 @@ def pairs_to_groups(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
         labels, _round, until_fixpoint=True, max_rounds=max_iter,
         changed=lambda new, old: (
             new.filter(F.col("_chg")).limit(1).count() > 0),
-        release=lambda old: old.unpersist(),
+        release=unpersist_checkpoint,
         what=f"pairs_to_groups did not reach the min-label fixpoint in "
              f"{max_iter} rounds (raise max_iter)")
     return labels.select(F.col("node"), F.col("label").alias("group"))

@@ -239,10 +239,6 @@ def _replayed(edges: DataFrame, replay, ddl: str) -> DataFrame | None:
         pd.DataFrame(dict(zip(names, cols))), ddl)
 
 
-def _unpersist(df: DataFrame) -> None:
-    df.unpersist(False)
-
-
 def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
              round_digits: int = 9,
              broadcast_ranks: bool | None = None,
@@ -398,7 +394,8 @@ def _ranks(edges: DataFrame, seeds: DataFrame | None, iters: int,
 
     ranks, rounds = graph_local.fixpoint(
         ranks, _round, iters=iters, until_fixpoint=until_fixpoint,
-        max_rounds=max_rounds, changed=_moving, release=_unpersist,
+        max_rounds=max_rounds, changed=_moving,
+        release=graph_local.unpersist_checkpoint,
         what=graph_local.PAGERANK_GUARD.format(tol=tol,
                                                max_rounds=max_rounds))
     # the ranks are materialized: the edge expansion's blocks can go
@@ -685,7 +682,7 @@ def kcore_peel(edges: DataFrame, k: int, iters: int = 4,
                .join(survivors.withColumnRenamed("node", "dst"),
                      "dst", "left_semi")
                .localCheckpoint(eager=True))
-        survivors.unpersist(False)
+        graph_local.unpersist_checkpoint(survivors)
         return new
 
     # surviving edge counts, one cached-scan scalar per fixpoint round
@@ -697,7 +694,8 @@ def kcore_peel(edges: DataFrame, k: int, iters: int = 4,
 
     e, rounds = graph_local.fixpoint(
         e, _round, iters=iters, until_fixpoint=until_fixpoint,
-        max_rounds=max_rounds, changed=_shrank, release=_unpersist,
+        max_rounds=max_rounds, changed=_shrank,
+        release=graph_local.unpersist_checkpoint,
         what=graph_local.KCORE_GUARD.format(max_rounds=max_rounds))
     if rounds_out is not None:
         rounds_out.append(rounds)
@@ -768,13 +766,14 @@ def hindex_coreness(edges: DataFrame, iters: int = 3,
 
     vals, rounds = graph_local.fixpoint(
         vals, _round, iters=iters, until_fixpoint=until_fixpoint,
-        max_rounds=max_rounds, release=_unpersist,
+        max_rounds=max_rounds,
+        release=graph_local.unpersist_checkpoint,
         changed=lambda new, old: (
             new.alias("n").join(old.alias("o"), "node")
             .filter(F.expr("n.val <> o.val")).count() > 0),
         what=graph_local.HINDEX_GUARD.format(max_rounds=max_rounds))
     # the values are materialized; release the edge expansion
-    both.unpersist(False)
+    graph_local.unpersist_checkpoint(both)
     if rounds_out is not None:
         rounds_out.append(rounds)
     return vals.select("node", F.col("val").alias("coreness"))
@@ -862,7 +861,8 @@ def label_propagation(edges: DataFrame, iters: int = 2,
     labels, rounds = graph_local.fixpoint(
         labels, _round, iters=iters, until_fixpoint=until_fixpoint,
         max_rounds=max_rounds,
-        release=_unpersist if until_fixpoint else None,
+        release=(graph_local.unpersist_checkpoint if until_fixpoint
+                 else None),
         changed=lambda new, old: (
             new.alias("n").join(old.alias("o"), "node")
             .filter(F.expr("n.label <> o.label")).count() > 0),
@@ -871,7 +871,7 @@ def label_propagation(edges: DataFrame, iters: int = 2,
         # fixpoint labels are materialized, so the edge expansion's
         # checkpoint blocks can be released here; the fixed-iters form
         # returns a LAZY plan over `both` and must keep them
-        both.unpersist(False)
+        graph_local.unpersist_checkpoint(both)
     if rounds_out is not None:
         rounds_out.append(rounds)
     return labels
@@ -986,7 +986,7 @@ def wcc(edges: DataFrame, max_rounds: int = 50,
     e, rounds = graph_local.fixpoint(
         e, lambda cur: _small_star(_large_star(cur)).localCheckpoint(),
         until_fixpoint=True, max_rounds=max_rounds, changed=_changed,
-        release=_unpersist,
+        release=graph_local.unpersist_checkpoint,
         what=f"wcc did not reach the star fixpoint in {max_rounds} "
              "rounds (O(log n) expected: raise max_rounds)")
     out = (nodes.join(e.select(F.col("src").alias("node"),
@@ -1372,7 +1372,7 @@ def hits(edges: DataFrame, iters: int = 2,
     def _release(state: tuple) -> None:
         for p in state:
             if p is not None:
-                p.unpersist(False)
+                graph_local.unpersist_checkpoint(p)
 
     (auths, hubs), _ = graph_local.fixpoint(
         (None, hubs), _round, iters=iters, release=_release)

@@ -172,6 +172,23 @@ def fixpoint(state, step, *, iters: int = 0, until_fixpoint: bool = False,
     return state, rounds
 
 
+def unpersist_checkpoint(df) -> None:
+    """Free the blocks of a ``localCheckpoint()`` frame.
+    ``DataFrame.unpersist()`` frees nothing there: the blocks belong to
+    the checkpointed RDD, the ``LogicalRDD`` that is the frame's analyzed
+    plan.  Call it only once every frame read from ``df`` has been
+    materialized, since a later read of ``df`` fails on the missing
+    blocks.  The RDD goes through ``SparkContext.unpersistRDD``, because
+    ``RDD.unpersist`` logs a warning for every locally checkpointed RDD.
+    Any other frame is unpersisted as usual."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        df.sparkSession.sparkContext._jsc.sc().unpersistRDD(
+            plan.rdd().id(), False)
+    else:
+        df.unpersist(False)
+
+
 def _any_differs(new, old) -> bool:
     return bool((new != old).any())
 

@@ -5,8 +5,18 @@ setting is chosen to also hold on a 1000-executor cluster at ~100 TB:
 
 * AQE on (runtime coalesce / skew-join splitting / join re-plan),
 * auto broadcast threshold left at Spark default so small dims broadcast,
-* shuffle partitions sized for local runs; on a real cluster AQE's
-  coalescePartitions makes the static number mostly irrelevant,
+* one shuffle partition per core (``spark.sql.shuffle.partitions`` =
+  the ``local[k]`` core count): a batch query's shuffles are coalesced
+  by AQE whatever the number, but a streaming query fixes its state
+  partition count from this setting when it first starts and AQE never
+  coalesces it.  Every micro-batch loads and commits each state store
+  and writes its checkpoint files, so partitions beyond the cores are
+  pure per-batch overhead (a ``local[2]`` stream under an 8-partition
+  floor ran its stateful stage as 4 waves of 8 tasks per batch).  A
+  restarted query keeps the count its checkpoint was written with —
+  Spark restores it from the offset log — so old checkpoints resume
+  unchanged.  At 8 or more cores this is the value the earlier
+  ``max(cores, 8)`` floor gave,
 * UTC session timezone so timestamp semantics match the DuckDB oracle and
   are deployment-independent,
 * streaming checkpoints committed through Spark's FileSystem-API
@@ -26,10 +36,10 @@ What is unchanged: both managers write a temp file and rename it into
 place (a POSIX rename is atomic), both refuse a non-overwriting rename
 onto an existing file, and Spark's ``<n>.delta.crc`` checksum files and
 Hadoop's ``.crc`` sidecars are still written.  The checksum setting,
-batch retention, state store provider and shuffle partition count stay
-at their values.  The manager assumes local or POSIX checkpoint paths,
-where rename is atomic; an object store without an atomic rename needs
-a manager of its own whatever this setting says.
+batch retention and state store provider stay at Spark's defaults.
+The manager assumes local or POSIX checkpoint paths, where rename is
+atomic; an object store without an atomic rename needs a manager of its
+own whatever this setting says.
 """
 
 from __future__ import annotations
@@ -72,7 +82,7 @@ def get_spark(app_name: str = "hazelcast-jet-spark") -> SparkSession:
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
+        .config("spark.sql.shuffle.partitions", str(int(cpus)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -342,3 +342,33 @@ def test_dec18_matches_spark_cast(spark, xs):
         "i", F.col("x").cast("decimal(28,18)").alias("d")).collect()}
     for i, x in enumerate(xs):
         assert graph_local._dec18(x) == int(got[i].scaleb(18)), x
+
+
+def test_distributed_rounds_free_their_checkpoints(spark):
+    """Each distributed round frees the checkpoint of the round before it
+    once its own result is materialized, so the persisted RDDs a
+    distributed pagerank or wcc leaves behind do not grow with the number
+    of rounds (``rounds_out`` selects the distributed loops)."""
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet()
+                   .toArray())
+
+    def left_behind(build):
+        before, rounds = persisted(), []
+        out = build(rounds)
+        assert out.count() > 0    # the result does not read a freed block
+        return len(persisted() - before), rounds[0]
+
+    e = spark.createDataFrame([(i, i + 1) for i in range(40)],
+                              "src long, dst long")
+    short = left_behind(lambda r: pagerank(e, iters=2, rounds_out=r))
+    long = left_behind(lambda r: pagerank(e, iters=6, rounds_out=r))
+    assert long[1] > short[1] and long[0] == short[0]
+
+    def chain(n):
+        return spark.createDataFrame([(i, i + 1) for i in range(n)],
+                                     "src long, dst long")
+
+    short = left_behind(lambda r: wcc(chain(4), rounds_out=r))
+    long = left_behind(lambda r: wcc(chain(64), rounds_out=r))
+    assert long[1] > short[1] and long[0] == short[0]

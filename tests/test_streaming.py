@@ -1145,3 +1145,99 @@ def test_session_checkpoint_state_and_restart(spark, tmp_path):
         for k, seen in per_key.items():
             assert len(seen) == 1, (w, k, seen)             # not duplicated
             assert seen[0][1] == closed_form(w, seen[0][0]), (w, k, seen)
+
+
+def test_state_partitions_default_and_rescale(spark, tmp_path):
+    """``get_spark`` sets one shuffle partition per core.  A streaming
+    query takes its state partition count from the session only when its
+    checkpoint is new: a checkpoint written under 8 partitions resumes
+    with its 8 state partitions under the default, emitting every window
+    once with its closed-form count, and a fresh checkpoint under the
+    default gets ``defaultParallelism`` state partitions."""
+    import threading
+
+    from hazelcast_jet_spark import AggregateOperations as A
+    from hazelcast_jet_spark import Pipeline, Sinks, WindowDefinition
+
+    rows, keys, t0 = 100, 10, 1_600_000_000   # batch b: values [b*rows, (b+1)*rows) at t0+b s
+    per_batch = rows // keys
+    default = spark.conf.get("spark.sql.shuffle.partitions")
+    assert default == str(spark.sparkContext.defaultParallelism)
+
+    def run(ckpt, n_batches):
+        out, done = {}, threading.Event()
+
+        def on_batch(bdf, bid):
+            out[bid] = sorted(tuple(r) for r in bdf.select(
+                F.col("window_start").cast("long") - t0, "key", "n").collect())
+            if len(out) >= n_batches:
+                done.set()
+
+        source = lambda s: (s.readStream.format("rate-micro-batch")  # noqa: E731
+                            .option("rowsPerBatch", rows)
+                            .option("numPartitions", 2)
+                            .option("startTimestamp", t0 * 1000)
+                            .option("advanceMillisPerBatch", 1000).load())
+        q = (Pipeline.create(spark).read_from(source)
+             .add_timestamps("timestamp", "0 seconds")
+             .with_column("key", F.col("value") % keys)
+             .grouping_key("key")
+             .window(WindowDefinition.sliding("2 seconds", "1 second"))
+             .aggregate(n=A.counting())
+             .write_to(Sinks.for_each_batch(on_batch, checkpoint=ckpt)))
+        try:
+            assert done.wait(120), q.exception()
+        finally:
+            q.stop()
+        return out
+
+    def state_parts(ckpt):
+        return len(glob.glob(os.path.join(ckpt, "state", "0", "[0-9]*")))
+
+    old = str(tmp_path / "old")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        first = run(old, 2)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", default)
+    assert state_parts(old) == 8
+    second = run(old, 3)
+    assert state_parts(old) == 8
+    assert min(second) <= max(first) + 1 and max(second) > max(first)
+
+    by_window = {}
+    for bid, out in {**first, **second}.items():
+        for w, k, n in out:
+            by_window.setdefault((w, k), set()).add((bid, n))
+    windows = sorted({w for w, _ in by_window})
+    assert windows == list(range(-1, windows[-1] + 1))
+    for (w, k), seen in by_window.items():
+        assert len(seen) == 1, (w, k, seen)          # emitted once
+        n = seen.pop()[1]
+        assert n == per_batch * sum(1 for b in (w, w + 1) if b >= 0), (w, k)
+    assert {k for _, k in by_window} == set(range(keys))
+
+    fresh = str(tmp_path / "fresh")
+    run(fresh, 1)
+    assert state_parts(fresh) == spark.sparkContext.defaultParallelism
+
+
+def test_run_to_batch_leaves_no_checksum_threads(spark, tmp_path):
+    """``run_to_batch`` turns checkpoint file checksums off, so its
+    queries start none of Spark's ``ChecksumCheckpointFileManager``
+    thread pools, which outlive the query that made them (a checkpointed
+    query with checksums on leaves four threads per state partition)."""
+    src = str(tmp_path / "src")
+    spark.range(100).withColumn("k", F.col("id") % 10).write.parquet(src)
+
+    def checksum_threads():
+        threads = spark._jvm.java.lang.Thread.getAllStackTraces().keySet()
+        return {t.getId() for t in threads.toArray()
+                if t.getName().startswith("ChecksumCheckpointFileManager-Thread-")}
+
+    before = checksum_threads()
+    for _ in range(3):
+        stream = (spark.readStream.schema("id long, k long").parquet(src)
+                  .groupBy("k").count())
+        assert run_to_batch(stream, "complete").count() == 10
+    assert checksum_threads() - before == set()

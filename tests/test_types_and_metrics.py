@@ -74,3 +74,69 @@ def test_jet_metrics_listener(spark, tmp_path):
         assert m["executionTimeMs"] > 0
     finally:
         spark.streams.removeListener(listener)
+
+
+def test_jet_metrics_listener_json_events(spark, tmp_path, monkeypatch):
+    """JetMetricsListener builds each event from one ``jevent.json()``:
+    while progress events are delivered no Java exception is converted
+    (PySpark's ``fromJObject`` events convert several per event, one per
+    py4j map iteration), and the metrics the callback receives equal
+    ``progress_to_jet_metrics`` of the ``recentProgress`` entry with the
+    same batch id."""
+    import threading
+
+    import pyspark.errors.exceptions.captured as captured
+
+    from hazelcast_jet_spark.metrics import (JetMetricsListener,
+                                             progress_to_jet_metrics)
+
+    converted = []
+    real = captured.convert_exception
+
+    def counting(e):
+        converted.append(e)
+        return real(e)
+
+    monkeypatch.setattr(captured, "convert_exception", counting)
+    batch_ids, received, three = [], [], threading.Event()
+
+    class Recording(JetMetricsListener):
+        def onQueryProgress(self, event):  # noqa: N802
+            batch_ids.append(event.progress.batchId)
+            super().onQueryProgress(event)
+            if len(received) >= 3:
+                three.set()
+
+    listener = Recording(lambda name, m: received.append((name, m)))
+    spark.streams.addListener(listener)
+    try:
+        q = (spark.readStream.format("rate-micro-batch")
+             .option("rowsPerBatch", 100).option("numPartitions", 2)
+             .option("startTimestamp", 1_600_000_000_000)
+             .option("advanceMillisPerBatch", 1000).load()
+             .withWatermark("timestamp", "0 seconds")
+             .groupBy(F.window("timestamp", "2 seconds", "1 second"),
+                      (F.col("value") % 10).alias("k"))
+             .count()
+             .writeStream.format("noop").outputMode("append")
+             .queryName("jet_json_events")
+             .option("checkpointLocation", str(tmp_path / "ckpt"))
+             .start())
+        try:
+            assert three.wait(120), q.exception()
+            n_converted = len(converted)
+            # every event delivered so far has its entry in
+            # recentProgress: Spark records a progress before posting it
+            n = len(received)
+            got = dict(zip(batch_ids[:n], received[:n]))
+            progress = {p.batchId: p for p in q.recentProgress}
+        finally:
+            q.stop()
+    finally:
+        spark.streams.removeListener(listener)
+    assert n_converted == 0
+    assert len(got) >= 3
+    for bid, (name, m) in got.items():
+        assert name == "jet_json_events"
+        assert m == progress_to_jet_metrics(progress[bid]), bid
+    assert m["receivedCount"] == 100 and m["totalKeys"] > 0
