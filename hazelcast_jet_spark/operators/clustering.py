@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
+from hazelcast_jet_spark.operators.graph_local import unpersist_checkpoint
+
 __all__ = ["kmeans_fit", "kmeans_fit_unrolled", "kmeans_assign",
            "l2_assign", "train_ivf_centroids", "pca_fit", "pca_project",
            "embedding_centroid_drift", "fisher_separation",
@@ -486,7 +488,9 @@ def coreset_kcenter(df: DataFrame, k: int, id_col: str = "vec_id",
     binary) followed by a top-1 ``orderBy(desc(min_dist), id)`` —
     TakeOrdered, no full sort.  One vector (d doubles) returns to the
     driver per iteration, independent of corpus size;
-    ``localCheckpoint`` per iteration keeps the plan O(1).  k is capped
+    ``localCheckpoint`` per iteration keeps the plan O(1), and each
+    iteration frees the checkpoint of the one before (nothing is left
+    in executor storage on return).  k is capped
     at 256 — beyond that train IVF/k-means centroids instead.
 
     Returns ``(sel_order, <id_col>, dist)`` — ``dist`` is the coverage
@@ -509,6 +513,7 @@ def coreset_kcenter(df: DataFrame, k: int, id_col: str = "vec_id",
     cur = base.withColumn(
         "__m", _l2_lit(vec_col, list(first[vec_col]), round_digits)
     ).localCheckpoint()
+    unpersist_checkpoint(base)
     for i in range(2, k + 1):
         cand = (cur.filter(~F.col(id_col).isin(chosen))
                 .orderBy(F.desc("__m"), id_col).limit(1).collect())
@@ -523,7 +528,8 @@ def coreset_kcenter(df: DataFrame, k: int, id_col: str = "vec_id",
             F.least("__m", _l2_lit(vec_col, list(row[vec_col]),
                                    round_digits)),
         ).localCheckpoint()
-        prev.unpersist(False)
+        unpersist_checkpoint(prev)
+    unpersist_checkpoint(cur)
     spark = df.sparkSession
     from pyspark.sql.types import (DoubleType, IntegerType as _IT,
                                    StructField, StructType)

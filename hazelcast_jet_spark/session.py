@@ -29,8 +29,16 @@ the permission of each new file and ``readlink`` when it renames one.
 Every state-store delta, offset-log and commit-log file pays those forks,
 and a traced ``stream_window`` bench run spent most of its ``addBatch``
 time in them.  The FileSystem-based manager goes through
-``FileSystem.create`` and ``rename``, which on ``file:`` paths stay in
-the JVM.
+``FileSystem.create`` and ``rename`` and forks far fewer processes, but
+not none: without ``libhadoop``, ``RawLocalFileSystem.setPermission``
+still forks a ``chmod`` for every file and directory it creates.  A
+logging ``chmod`` shim first on ``PATH`` counted 12 forks per
+micro-batch of the ``stream_window`` bench at ``local[2]`` (4 per state
+partition, 2 each for the offset and commit logs) and 9-12 per parquet
+write.  A JVM ``FileSystem`` that set the permissions through
+``java.nio`` removed all of them, yet gained only about 1% on
+``stream_window`` and 4% on ``graph_iterative``, too little for a Java
+build step.
 
 What is unchanged: both managers write a temp file and rename it into
 place (a POSIX rename is atomic), both refuse a non-overwriting rename
@@ -47,6 +55,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from hazelcast_jet_spark.sources import read_files
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -105,14 +115,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     The ``events`` table stores TIMESTAMP(NANOS) which Spark's parquet
     reader rejects; we read nanos as long and rebuild a TIMESTAMP_NTZ at
     microsecond precision (truncated, matching DuckDB's ns→µs cast).
-    The arithmetic is session-timezone-independent.
+    The arithmetic is session-timezone-independent.  Reads go through
+    :func:`~hazelcast_jet_spark.sources.read_files`, so a table read
+    again in the same session infers no schema.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         from pyspark.sql import functions as F
 
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = read_files(spark, path)
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn(
                 "ts",
@@ -123,7 +135,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 ),
             )
         return df
-    return spark.read.parquet(path)
+    return read_files(spark, path)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -8,13 +8,119 @@ Each factory returns ``fn(spark) -> DataFrame`` so `Pipeline.read_from`
 can defer reading until the pipeline owns a session.  Predicate/projection
 pushdown that Jet implements per-connector (ReadMapOrCacheP server-side
 predicates) is native to Spark's scan planning.
+
+The parquet-capable batch readers (``Sources.map``, ``FileSources.files``,
+``HadoopSources.input_format``, ``session.load_table``) go through
+:func:`read_files`, which infers a parquet or orc schema once per set of
+files (see there).
 """
 
 from __future__ import annotations
 
-from typing import Callable
+import copy
+import os
+import stat
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+#: formats whose schema is read from the file footers, so a schema
+#: inferred once is exact while the files and the session confs stay.
+#: The cache is process-wide: its key holds every input of inference,
+#: so sessions that share it get the schema their own read would infer.
+_FOOTER_FORMATS = ("parquet", "orc")
+_SCHEMA_CACHE_SIZE = 256
+_schemas: OrderedDict[tuple, StructType] = OrderedDict()
+_schemas_lock = threading.Lock()
+
+
+def read_files(spark: SparkSession, path: str, fmt: str = "parquet",
+               schema=None, options: dict | None = None) -> DataFrame:
+    """Batch ``spark.read.format(fmt).options(**options).load(path)``
+    that infers a parquet or orc schema once.
+
+    Spark infers such a schema with a job of its own
+    (``SchemaMergeUtils.mergeSchemasInParallel`` reads the footers as a
+    job even for one file), and Jet's file sources know their record
+    type before a job starts.  So for a parquet or orc read of an
+    absolute local path with no caller schema, the inferred schema is
+    kept in a small LRU and passed back with ``.schema()`` on the next
+    read, which runs no job.  The cache key is the format, the path,
+    the options, the session's SQL confs (one py4j call; a conf such as
+    ``spark.sql.parquet.binaryAsString`` changes what inference
+    returns) and ``(relpath, size, mtime_ns, inode)`` of every file
+    under the path, so a rewritten, added or removed file infers again.
+    Every other read (other formats, remote or relative paths, globs,
+    a caller schema) is the plain reader call.
+    """
+    options = options or {}
+    r = spark.read.format(fmt).options(**options)
+    if schema is not None:
+        return r.schema(schema).load(path)
+    key = _schema_key(spark, path, fmt, options)
+    if key is None:
+        return r.load(path)
+    with _schemas_lock:
+        cached = _schemas.get(key)
+        if cached is not None:
+            _schemas.move_to_end(key)
+    if cached is not None:
+        return r.schema(cached).load(path)
+    df = r.load(path)
+    inferred = copy.deepcopy(df.schema)  # the frame's own can be mutated
+    with _schemas_lock:
+        _schemas[key] = inferred
+        while len(_schemas) > _SCHEMA_CACHE_SIZE:
+            _schemas.popitem(last=False)
+    return df
+
+
+def _schema_key(spark: SparkSession, path, fmt: str,
+                options: dict) -> tuple | None:
+    """The cache key of :func:`read_files`, or None for a read it does
+    not cache."""
+    if fmt not in _FOOTER_FORMATS or not isinstance(path, str):
+        return None
+    local = path
+    if local.startswith("file:"):
+        local = local[len("file:"):]
+        if local.startswith("//"):   # file:///abs -> /abs
+            local = local[2:]
+    # a relative path resolves against the JVM's working directory,
+    # which need not be this process's; a glob is expanded by Hadoop
+    if not local.startswith("/") or any(c in local for c in "*?[{\\"):
+        return None
+    files = _files_fingerprint(local)
+    if files is None:
+        return None
+    confs = spark._jsparkSession.sessionState().conf().getAllConfs().toString()
+    opts = tuple(sorted((str(k), str(v)) for k, v in options.items()))
+    return fmt, local, opts, confs, files
+
+
+def _files_fingerprint(root: str) -> tuple | None:
+    """``(relpath, size, mtime_ns, inode)`` of every file under ``root``
+    (``root`` itself when it is a file); None when it cannot be read."""
+    try:
+        st = os.stat(root)
+        if not stat.S_ISDIR(st.st_mode):
+            return (("", st.st_size, st.st_mtime_ns, st.st_ino),)
+        out = []
+        for d, _, names in os.walk(root, onerror=_raise, followlinks=True):
+            for n in names:
+                p = os.path.join(d, n)
+                st = os.stat(p)
+                out.append((os.path.relpath(p, root), st.st_size,
+                            st.st_mtime_ns, st.st_ino))
+    except OSError:
+        return None
+    return tuple(sorted(out))
+
+
+def _raise(err: OSError):
+    raise err
 
 
 class Sources:
@@ -28,7 +134,7 @@ class Sources:
         managed columnar table; accepts a parquet path or a catalog name."""
         def read(spark: SparkSession) -> DataFrame:
             if table_path_or_name.endswith(".parquet") or "/" in table_path_or_name:
-                return spark.read.parquet(table_path_or_name)
+                return read_files(spark, table_path_or_name)
             return spark.table(table_path_or_name)
         return read
 
@@ -143,17 +249,14 @@ class FileSources:
         if fmt not in FileSources._FORMATS:
             raise ValueError(f"unsupported format {fmt!r} (have {sorted(FileSources._FORMATS)})")
         def read(spark: SparkSession) -> DataFrame:
+            reader = fmt
             if fmt == "avro":
                 # spark-avro isn't bundled; jet-avro is the pure-Python
                 # container-file data source (avro_io.py)
                 from hazelcast_jet_spark import avro_io
                 avro_io.register(spark)
-                r = spark.read.format("jet-avro").options(**options)
-            else:
-                r = spark.read.format(fmt).options(**options)
-            if schema is not None:
-                r = r.schema(schema)
-            return r.load(path)
+                reader = "jet-avro"
+            return read_files(spark, path, reader, schema, options)
         return read
 
 
@@ -269,7 +372,7 @@ class HadoopSources:
             if fmt == "text":
                 return (spark.read.options(**options).text(path)
                         .withColumnRenamed("value", value_col))
-            return spark.read.options(**options).parquet(path)
+            return read_files(spark, path, options=options)
         return read
 
 

@@ -156,8 +156,17 @@ def _spy(monkeypatch, module, name):
 
 
 @pytest.mark.parametrize("op, replay, n_edges", [
-    # lpa collects the raw rows (the duplicate row included); hits and
-    # khop collect the deduped / canonical set their probe plan builds
+    # pagerank, ppr, kcore, hindex and lpa collect the raw rows (the
+    # duplicate row included); hits and khop collect the deduped /
+    # canonical set their probe plan builds
+    pytest.param(lambda e: pagerank(e, iters=3), "pagerank_local",
+                 lambda e: e.count(), id="pagerank"),
+    pytest.param(lambda e: _ppr(e), "pagerank_local", lambda e: e.count(),
+                 id="ppr"),
+    pytest.param(lambda e: kcore_peel(e, k=2, iters=4), "kcore_local",
+                 lambda e: e.count(), id="kcore"),
+    pytest.param(lambda e: hindex_coreness(e, iters=3), "hindex_local",
+                 lambda e: e.count(), id="hindex"),
     (lambda e: label_propagation(e, iters=2), "lpa_local",
      lambda e: e.count()),
     (lambda e: hits(e, iters=2), "hits_local",
@@ -192,6 +201,21 @@ def test_wcc_threshold_boundary(spark, edges, monkeypatch):
     assert len(calls) == 1
     monkeypatch.setattr(dedup, "_PAIRS_COLLECT_THRESHOLD", n - 1)
     below = _rows(wcc(edges))
+    assert len(calls) == 1
+    assert at == below and len(at) > 0
+
+
+def test_pairs_to_groups_threshold_boundary(spark, edges, monkeypatch):
+    from hazelcast_jet_spark.operators import dedup
+
+    # pairs_to_groups probes the raw pair rows, duplicates included
+    n = edges.count()
+    calls = _spy(monkeypatch, dedup, "min_root_components")
+    monkeypatch.setattr(dedup, "_PAIRS_COLLECT_THRESHOLD", n)
+    at = _rows(_pairs_to_groups(edges))
+    assert len(calls) == 1
+    monkeypatch.setattr(dedup, "_PAIRS_COLLECT_THRESHOLD", n - 1)
+    below = _rows(_pairs_to_groups(edges))
     assert len(calls) == 1
     assert at == below and len(at) > 0
 
@@ -303,14 +327,25 @@ def test_distributed_path_job_count(spark, edges, monkeypatch, request,
     """Jobs fired while building each iterative operator's distributed
     result, with the small paths switched off (so no probe runs): the
     checkpoints, the scalar counts and the convergence probes.  A round
-    loop that gains an eager job shows up here."""
+    loop that gains an eager job shows up here.
+
+    The counts were taken at ``spark.sql.shuffle.partitions`` = 4, which
+    ``get_spark`` sets from the core count, and they move with it
+    (pagerank-fixpoint fires 67 jobs at 32 partitions), so the test
+    pins the setting rather than the machine."""
     from hazelcast_jet_spark.operators import dedup
 
     monkeypatch.setattr(graph_local, "GRAPH_COLLECT_THRESHOLD", 0)
     monkeypatch.setattr(dedup, "_PAIRS_COLLECT_THRESHOLD", 0)
-    out = []
-    n = _jobs_fired(spark, lambda: out.append(build(edges)),
-                    f"distributed-jobs-{request.node.callspec.id}")
+    key = "spark.sql.shuffle.partitions"
+    partitions = spark.conf.get(key)
+    spark.conf.set(key, "4")
+    try:
+        out = []
+        n = _jobs_fired(spark, lambda: out.append(build(edges)),
+                        f"distributed-jobs-{request.node.callspec.id}")
+    finally:
+        spark.conf.set(key, partitions)
     assert n == jobs
     assert out[0].count() > 0
 

@@ -404,6 +404,28 @@ def test_coreset_kcenter_matches_python_greedy(spark):
     assert coreset_kcenter(tiny, 5, "id", "v").count() == 2
 
 
+def test_coreset_kcenter_frees_its_checkpoints(spark):
+    """Each iteration's ``localCheckpoint`` is freed once the next one is
+    materialized (``DataFrame.unpersist`` frees nothing there), so the
+    persisted RDDs left behind do not grow with k."""
+    from hazelcast_jet_spark.operators.clustering import coreset_kcenter
+
+    df = spark.createDataFrame(
+        [(i, [float(i % 17), float(i // 17)]) for i in range(200)],
+        "id long, v array<double>")
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet()
+                   .toArray())
+
+    def left_behind(k):
+        before = persisted()
+        assert coreset_kcenter(df, k, "id", "v").count() == k
+        return len(persisted() - before)
+
+    assert left_behind(8) == left_behind(2) == 0
+
+
 def test_kmeans_fit_unrolled_separates_blobs(spark):
     """kmeans_fit_unrolled on two well-separated blobs: the fixed
     2-iteration fit lands one centroid in each blob and the final
