@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hazelcast_jet_spark.operators.graph_local import unpersist_checkpoint
 from hazelcast_jet_spark.operators.text import tokens
 
 #: terminal symbol appended to every word (Sennrich's </w> convention:
@@ -106,9 +107,9 @@ def bpe_fit(df: DataFrame, text_col: str = "text", n_merges: int = 32,
         merges.append((a, b))
         nxt = cur.select("n", merge_fold(F.col("syms"), a, b).alias("syms"))
         nxt = nxt.localCheckpoint(eager=True)
-        cur.unpersist()
+        unpersist_checkpoint(cur)
         cur = nxt
-    cur.unpersist()
+    unpersist_checkpoint(cur)
     return merges
 
 

@@ -10,8 +10,8 @@ into fixed-size context windows ("bins") before batching.  Two variants:
   is bit-identical on any engine — this is the oracle-gated path.
 - :func:`pack_greedy` — greedy next-fit packing: a document that would
   overflow the current bin opens a new one (no document straddles bins).
-  Sequential recurrence per stratum, implemented with applyInPandas; the
-  stratum (e.g. ``source``) is the parallelism unit, which matches real
+  Sequential recurrence per stratum, a keyed ordered scan; the stratum
+  (e.g. ``source``) is the parallelism unit, which matches real
   pipelines where packing runs per shard.
 
 Reference analog: none — Hazelcast Jet has no packing operator; this is
@@ -24,6 +24,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from hazelcast_jet_spark.streaming.stateful import (appended_schema,
+                                                    map_stateful_batch)
 
 
 def pack_concat(
@@ -70,22 +73,12 @@ def pack_greedy(
     their own.  No document straddles bins (unlike :func:`pack_concat`).
 
     The recurrence is inherently sequential *within* a stratum, so the
-    stratum is the parallelism unit (applyInPandas per stratum) — at
+    stratum is the parallelism unit (one scan group per stratum) — at
     100 TB, pack per shard/source, never globally.
     """
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    parts = partition_cols or []
-    # fresh StructType — StructType.add mutates in place, which would corrupt
-    # the DataFrame's cached schema
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField("bin_id", LongType())])
-    order_cols, tok = [order_col], token_col
-
     def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_cols, kind="mergesort").reset_index(drop=True)
         bins, cur_bin, cur_tok = [], 0, 0
-        for t in pdf[tok].astype("int64"):
+        for t in pdf[token_col].astype("int64"):
             if cur_tok > 0 and cur_tok + t > budget:
                 cur_bin, cur_tok = cur_bin + 1, 0
             bins.append(cur_bin)
@@ -93,12 +86,10 @@ def pack_greedy(
         pdf["bin_id"] = pd.Series(bins, dtype="int64")
         return pdf
 
-    if parts:
-        return df.groupBy(*parts).applyInPandas(_pack, schema=out_schema)
-    # A global pack is a single sequential task by construction.  Silently
-    # serializing a large input is a scale hazard, so be loud about it:
-    # the caller should pass partition_cols (pack per shard/source).
-    if df.rdd.getNumPartitions() > 1:
+    parts = partition_cols or []
+    if not parts and df.rdd.getNumPartitions() > 1:
+        # A global pack is a single sequential task by construction: be
+        # loud about serializing a large input (pack per shard/source).
         import warnings
 
         warnings.warn(
@@ -106,7 +97,9 @@ def pack_greedy(
             f"{df.rdd.getNumPartitions()}-partition input to ONE sequential "
             "task; pass partition_cols to pack per stratum at scale",
             ResourceWarning, stacklevel=2)
-    return df.coalesce(1).groupBy().applyInPandas(_pack, schema=out_schema)
+    return map_stateful_batch(df if parts else df.coalesce(1), parts, _pack,
+                              appended_schema(df, "bin_id bigint"),
+                              order_col)
 
 
 def pack_stats(packed: DataFrame, token_col: str,

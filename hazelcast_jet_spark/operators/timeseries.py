@@ -25,6 +25,9 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from hazelcast_jet_spark.streaming.stateful import (appended_schema,
+                                                    map_stateful_batch)
+
 
 def _epoch_seconds(df: DataFrame, time_col: str) -> Column:
     """Whole-second (FLOOR) epoch of a timestamp column, session-tz-FREE.
@@ -183,21 +186,15 @@ def ewma(df: DataFrame, key_col: str, time_col: str, value_col: str,
     renormalized form).  Verified against a hand-rolled Python model in
     tests rather than a SQL oracle (not SQL-expressible).
     """
-    import pandas as pd  # noqa: F401
-
-    order = [time_col] + ([id_col] if id_col else [])
-    fields = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                       for f in df.schema.fields)
-    out_schema = f"{fields}, {out_col} double"
-
-    def _ewm(pdf: "pd.Series") -> "pd.DataFrame":
-        pdf = pdf.sort_values(order, kind="mergesort")
+    def _ewm(pdf):
         pdf[out_col] = (
             pdf[value_col].astype("float64").ewm(alpha=alpha, adjust=False).mean()
         )
         return pdf
 
-    return df.groupBy(key_col).applyInPandas(_ewm, out_schema)
+    return map_stateful_batch(df, [key_col], _ewm,
+                              appended_schema(df, f"{out_col} double"),
+                              [time_col] + ([id_col] if id_col else []))
 
 
 def kalman_level(df: DataFrame, key_col: str, time_col: str,
@@ -232,35 +229,37 @@ def kalman_level(df: DataFrame, key_col: str, time_col: str,
 
     Returns the input columns plus ``(out_col, gain_col)`` doubles.
     """
-    import pandas as pd  # noqa: F401
-
     if q < 0 or r <= 0:
         raise ValueError(f"need q >= 0 and r > 0, got q={q}, r={r}")
-    fields = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                       for f in df.schema.fields)
-    out_schema = f"{fields}, {out_col} double, {gain_col} double"
-    qf, rf = float(q), float(r)
 
-    def _filter(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values(time_col, kind="mergesort")
-        vals = [float(v) for v in pdf[value_col]]
-        levels, gains = [], []
-        x = p = 0.0
-        for i, v in enumerate(vals):
-            if i == 0:
-                x, p, k = v, rf, 1.0
-            else:
-                pp = p + qf
-                k = pp / (pp + rf)
-                x = x + k * (v - x)
-                p = (1.0 - k) * pp
-            levels.append(x)
-            gains.append(k)
-        pdf[out_col] = levels
-        pdf[gain_col] = gains
+    def _filter(pdf):
+        pdf[out_col], pdf[gain_col], _, _ = kalman_steps(
+            pdf[value_col], float(q), float(r))
         return pdf
 
-    return df.groupBy(key_col).applyInPandas(_filter, out_schema)
+    return map_stateful_batch(
+        df, [key_col], _filter,
+        appended_schema(df, f"{out_col} double, {gain_col} double"),
+        time_col)
+
+
+def kalman_steps(values, q: float, r: float, x=None, p=None):
+    """:func:`kalman_level`'s steps from the posterior ``(x, p)`` (None:
+    the first value) -> ``(levels, gains, x, p)``; the stream twin runs
+    it from its carried posterior."""
+    levels, gains = [], []
+    for v in values:
+        v = float(v)
+        if x is None:
+            x, p, k = v, r, 1.0
+        else:
+            pp = p + q
+            k = pp / (pp + r)
+            x = x + k * (v - x)
+            p = (1.0 - k) * pp
+        levels.append(x)
+        gains.append(k)
+    return levels, gains, x, p
 
 
 def croston(df: DataFrame, key_col: str, time_col: str, value_col: str,
@@ -287,17 +286,11 @@ def croston(df: DataFrame, key_col: str, time_col: str, value_col: str,
     Returns input columns plus ``(z, p, forecast)`` doubles — one row
     per demand epoch; take each key's LAST row for the current rate.
     """
-    import pandas as pd  # noqa: F401
-
     if not 0.0 < alpha <= 1.0:
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
     af = float(alpha)
-    fields = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                       for f in df.schema.fields)
-    out_schema = f"{fields}, z double, p double, forecast double"
 
-    def _fit(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values(time_col, kind="mergesort")
+    def _fit(pdf):
         times = [float(t) for t in pdf[time_col]]
         sizes = [float(v) for v in pdf[value_col]]
         zs, ps, fc = [], [], []
@@ -317,7 +310,9 @@ def croston(df: DataFrame, key_col: str, time_col: str, value_col: str,
         pdf["forecast"] = fc
         return pdf
 
-    return df.groupBy(key_col).applyInPandas(_fit, out_schema)
+    return map_stateful_batch(
+        df, [key_col], _fit,
+        appended_schema(df, "z double, p double, forecast double"), time_col)
 
 
 def cohort_retention(df: DataFrame, key_col: str = "user_id",
@@ -1008,15 +1003,7 @@ def holt_linear(df: DataFrame, key_col: str, time_col: str, value_col: str,
     an exact binary scaling, so a recursive-CTE oracle replays the
     bits exactly.
     """
-    import pandas as pd  # noqa: F401
-
-    order = [time_col] + ([id_col] if id_col else [])
-    fields = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                       for f in df.schema.fields)
-    out_schema = f"{fields}, level double, trend double, forecast double"
-
-    def _holt(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values(order, kind="mergesort").reset_index(drop=True)
+    def _holt(pdf):
         xs = pdf[value_col].astype("float64").to_list()
         levels, trends = [], []
         l_prev = b_prev = 0.0
@@ -1029,12 +1016,15 @@ def holt_linear(df: DataFrame, key_col: str, time_col: str, value_col: str,
             levels.append(l_cur)
             trends.append(b_cur)
             l_prev, b_prev = l_cur, b_cur
-        pdf["level"] = pd.Series(levels, dtype="float64")
-        pdf["trend"] = pd.Series(trends, dtype="float64")
+        pdf["level"] = levels
+        pdf["trend"] = trends
         pdf["forecast"] = pdf["level"] + pdf["trend"]
         return pdf
 
-    return df.groupBy(key_col).applyInPandas(_holt, out_schema)
+    return map_stateful_batch(
+        df, [key_col], _holt,
+        appended_schema(df, "level double, trend double, forecast double"),
+        [time_col] + ([id_col] if id_col else []))
 
 
 def holt_winters_additive(df: DataFrame, key_col: str, time_col: str,
@@ -1065,20 +1055,12 @@ def holt_winters_additive(df: DataFrame, key_col: str, time_col: str,
     recursive-CTE oracle carrying the seasonal ring as a LIST column
     replays the bits exactly.
     """
-    import pandas as pd  # noqa: F401
-
     if period < 2:
         raise ValueError(f"period must be >= 2, got {period}")
-    order = [time_col] + ([id_col] if id_col else [])
-    fields = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                       for f in df.schema.fields)
-    out_schema = (f"{fields}, level double, trend double, "
-                  f"seasonal double, forecast double")
 
-    def _hw(pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def _hw(pdf):
         from collections import deque
 
-        pdf = pdf.sort_values(order, kind="mergesort").reset_index(drop=True)
         xs = pdf[value_col].astype("float64").to_list()
         levels, trends, seasonals, forecasts = [], [], [], []
         l_prev = b_prev = 0.0
@@ -1100,13 +1082,17 @@ def holt_winters_additive(df: DataFrame, key_col: str, time_col: str,
             forecasts.append(l_cur + b_cur
                              + (ring[0] if len(ring) == period else 0.0))
             l_prev, b_prev = l_cur, b_cur
-        pdf["level"] = pd.Series(levels, dtype="float64")
-        pdf["trend"] = pd.Series(trends, dtype="float64")
-        pdf["seasonal"] = pd.Series(seasonals, dtype="float64")
-        pdf["forecast"] = pd.Series(forecasts, dtype="float64")
+        pdf["level"] = levels
+        pdf["trend"] = trends
+        pdf["seasonal"] = seasonals
+        pdf["forecast"] = forecasts
         return pdf
 
-    return df.groupBy(key_col).applyInPandas(_hw, out_schema)
+    return map_stateful_batch(
+        df, [key_col], _hw,
+        appended_schema(df, "level double, trend double, seasonal double, "
+                            "forecast double"),
+        [time_col] + ([id_col] if id_col else []))
 
 
 def transition_entropy(
@@ -1385,29 +1371,33 @@ def cusum_alarms(df: DataFrame, key_col: str, time_col: str,
 
     Appends ``target``, ``cusum`` and ``alarm`` columns.
     """
-    import pandas as pd  # noqa: F401
-
-    order = [time_col] + ([id_col] if id_col else [])
     means = df.groupBy(key_col).agg(
         (F.sum(F.col(value_col).cast("decimal(28,12)")).cast("double")
          / F.count(F.lit(1)).cast("double")).alias("target"))
     j = df.join(F.broadcast(means), key_col)
-    fields = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                       for f in j.schema.fields)
-    out_schema = f"{fields}, cusum double, alarm boolean"
 
-    def _cusum(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values(order, kind="mergesort").reset_index(drop=True)
-        t = float(pdf["target"].iloc[0])
-        s, out = 0.0, []
-        for x in pdf[value_col].astype("float64"):
-            s = max(0.0, s + (x - t - slack))
-            out.append(s)
-        pdf["cusum"] = pd.Series(out, dtype="float64")
-        pdf["alarm"] = pdf["cusum"] > threshold
-        return pdf
+    def _cusum(pdf):
+        return cusum_frame(pdf, value_col, 0.0, float(slack), threshold)[0]
 
-    return j.groupBy(key_col).applyInPandas(_cusum, out_schema)
+    return map_stateful_batch(
+        j, [key_col], _cusum,
+        appended_schema(j, "cusum double, alarm boolean"),
+        [time_col] + ([id_col] if id_col else []))
+
+
+def cusum_frame(pdf, value_col: str, s: float, slack: float,
+                threshold: float):
+    """:func:`cusum_alarms`'s steps from the statistic ``s`` ->
+    ``(pdf + (cusum, alarm), s)``; the stream twin runs it from its
+    carried ``s``."""
+    t = float(pdf["target"].iloc[0])
+    out = []
+    for x in pdf[value_col].astype("float64"):
+        s = max(0.0, s + (x - t - slack))
+        out.append(s)
+    pdf["cusum"] = out
+    pdf["alarm"] = pdf["cusum"] > threshold
+    return pdf, s
 
 
 def kaplan_meier(df: DataFrame, duration_col: str, observed_col: str,
@@ -2791,7 +2781,7 @@ def theta_forecast(df: DataFrame, key_col: str, time_col: str,
     per-key ROLLUP (the ewma/holt/cusum lane).  Returns ``h`` rows per
     key: ``(key_col, step, n, slope, ses_level, forecast)``.
     """
-    import pandas as pd  # noqa: F401
+    import pandas as pd
 
     w = Window.partitionBy(key_col).orderBy(time_col)
     base = (df.select(key_col, time_col,
@@ -2820,13 +2810,11 @@ def theta_forecast(df: DataFrame, key_col: str, time_col: str,
         ((F.col("__syd") - F.col("__b") * F.col("__sxd"))
          / F.col("__n").cast("double")).alias("__a"))
     j = base.join(F.broadcast(fit), key_col)
-    key_type = {f.name: f.dataType.simpleString()
-                for f in df.schema.fields}[key_col]
-    out_schema = (f"{key_col} {key_type}, step int, n bigint, "
-                  "slope double, ses_level double, forecast double")
+    out_schema = (f"{key_col} {df.schema[key_col].dataType.simpleString()}, "
+                  "step int, n bigint, slope double, ses_level double, "
+                  "forecast double")
 
-    def _theta(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values("__t", kind="mergesort").reset_index(drop=True)
+    def _theta(pdf):
         a = float(pdf["__a"].iloc[0]); b = float(pdf["__b"].iloc[0])
         n = int(pdf["__n"].iloc[0])
         s = None
@@ -2840,7 +2828,7 @@ def theta_forecast(df: DataFrame, key_col: str, time_col: str,
         return pd.DataFrame(rows, columns=[key_col, "step", "n", "slope",
                                            "ses_level", "forecast"])
 
-    return (j.groupBy(key_col).applyInPandas(_theta, out_schema)
+    return (map_stateful_batch(j, [key_col], _theta, out_schema, "__t")
             .select(key_col, "step", "n",
                     (F.round("slope", round_digits) + F.lit(0.0))
                     .alias("slope"),

@@ -30,6 +30,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from hazelcast_jet_spark.streaming.stateful import map_stateful_batch
+
 _INTERVAL_UNIT_S = {
     "microsecond": 1e-6, "millisecond": 1e-3, "second": 1.0,
     "minute": 60.0, "hour": 3600.0, "day": 86400.0, "week": 604800.0,
@@ -304,12 +306,12 @@ class GeneralStage:
     # --- stateful record-at-a-time (GeneralStage.java:156-265) ------------
 
     def map_stateful_global(self, fn: Callable, schema, order_col: str | None = None):
-        """Global mapStateful — GeneralStage.java:156.  Batch: a single
+        """Global mapStateful — GeneralStage.java:156: one ``groupBy()``
         applyInPandas group (Jet also funnels through ONE processor —
         GlobalMapStatefulTransform.java — so this is semantics-faithful;
-        it is inherently non-scalable in both systems)."""
-        from hazelcast_jet_spark.streaming.stateful import map_stateful_batch_global
-        return self._wrap(map_stateful_batch_global(self.df, fn, schema, order_col))
+        it is inherently non-scalable in both systems).  Bounded stages
+        only, like :meth:`StageWithKey.map_stateful`."""
+        return self._wrap(map_stateful_batch(self.df, [], fn, schema, order_col))
 
     def write_to(self, sink) -> Any:
         """writeTo(sink) — triggers execution (Jet: jet.newJob().join())."""
@@ -480,13 +482,14 @@ class StageWithKey:
         )
         return self.stage._wrap(self.stage.df.withColumn(name, op.over(w)))
 
-    def map_stateful(self, fn: Callable, schema, ttl: str | None = None,
+    def map_stateful(self, fn: Callable, schema,
                      order_col: str | None = None) -> GeneralStage:
-        """Keyed mapStateful([ttl]) — StreamStageWithKey.java:116-320;
-        TransformStatefulP.java:48-151.  Batch: applyInPandas per key
-        (fn sees the key's rows ordered by order_col); streaming:
-        applyInPandasWithState with EventTimeTimeout ≡ Jet's TTL."""
-        from hazelcast_jet_spark.streaming.stateful import map_stateful_batch
+        """Keyed mapStateful — StreamStageWithKey.java:116-320;
+        TransformStatefulP.java:48-151.  Bounded stages only: applyInPandas
+        per key, ``fn`` sees the key's rows ordered by ``order_col``.  A
+        streaming stage raises ``ValueError``: per-key state carried
+        across micro-batches, with TTL eviction, is
+        ``streaming.map_stateful_stream`` (applyInPandasWithState)."""
         return self.stage._wrap(
             map_stateful_batch(self.stage.df, self.keys, fn, schema, order_col)
         )
@@ -496,19 +499,13 @@ class StageWithKey:
         """Keyed filterStateful — GeneralStage.java:188: ``pred_fn(pdf) ->
         pdf-subset`` returns the rows of one key to keep (stateful
         predicate over the key's history, e.g. first-occurrence dedup)."""
-        from hazelcast_jet_spark.streaming.stateful import filter_stateful_batch
-        return self.stage._wrap(
-            filter_stateful_batch(self.stage.df, self.keys, pred_fn, order_col)
-        )
+        return self.map_stateful(pred_fn, self.stage.df.schema, order_col)
 
     def flat_map_stateful(self, fn: Callable, schema,
                           order_col: str | None = None) -> GeneralStage:
         """Keyed flatMapStateful — GeneralStage.java:226: 0..n output rows
         per input, driven by per-key state; output schema is the fn's."""
-        from hazelcast_jet_spark.streaming.stateful import flat_map_stateful_batch
-        return self.stage._wrap(
-            flat_map_stateful_batch(self.stage.df, self.keys, fn, schema, order_col)
-        )
+        return self.map_stateful(fn, schema, order_col)
 
     def window(self, wdef: WindowDefinition) -> "StageWithKeyAndWindow":
         """StageWithKeyAndWindow — StageWithKeyAndWindow.java:53."""

@@ -16,12 +16,10 @@ watermark timeout.
 
 from hazelcast_jet_spark.streaming.stateful import (
     map_stateful_batch,
-    map_stateful_batch_global,
     map_stateful_stream,
 )
 
 __all__ = [
     "map_stateful_batch",
-    "map_stateful_batch_global",
     "map_stateful_stream",
 ]

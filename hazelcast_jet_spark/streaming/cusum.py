@@ -12,9 +12,9 @@ full-series mean, so the production shape is yesterday's rollup mean
 feeding today's detector.  State is O(1) per key forever (one double +
 one ordinal).
 
-In-order/duplicate policing is the :mod:`.kalman` contract verbatim:
-duplicate or out-of-order (key, time) rows raise (or drop) uniformly
-whatever the micro-batch boundaries.
+The steps are the batch loop (``timeseries.cusum_frame``) run from the
+carried statistic; late rows (``kalman.late_ordinals``) raise or drop
+through ``stateful.in_order_rows`` whatever the micro-batch boundaries.
 """
 
 from __future__ import annotations
@@ -32,68 +32,35 @@ def stream_cusum_alarms(series: DataFrame, key_col: str, time_col: str,
     reference table (broadcast into the stream).
 
     Emits each input row extended with ``(target, cusum, alarm)`` in
-    update mode; pure add/sub/max double arithmetic in the same fixed
-    order as the batch :func:`~hazelcast_jet_spark.operators.timeseries.
-    cusum_alarms`, so bounded-input runs replay it bit-for-bit
+    update mode; the add/sub/max steps are the batch
+    :func:`~hazelcast_jet_spark.operators.timeseries.cusum_alarms`'s own
+    loop, so bounded-input runs replay it bit-for-bit
     regardless of trigger boundaries.  ``time_col`` must be a DATE
     column; state keeps its ordinal.
     """
-    import pandas as pd
+    from hazelcast_jet_spark.operators.timeseries import cusum_frame
+    from hazelcast_jet_spark.streaming.kalman import late_ordinals
+    from hazelcast_jet_spark.streaming.stateful import (
+        appended_schema, in_order_rows, map_stateful_stream)
 
-    from hazelcast_jet_spark.streaming.stateful import map_stateful_stream
-
-    if on_out_of_order not in ("raise", "drop"):
-        raise ValueError(
-            f"on_out_of_order must be 'raise' or 'drop', "
-            f"got {on_out_of_order!r}")
+    take = in_order_rows("stream_cusum_alarms", time_col, on_out_of_order)
     sl, th = float(slack), float(threshold)
 
     joined = series.join(
         F.broadcast(targets.select(key_col, "target")), key_col)
 
     def fn(key, pdfs, state):
-        if state.exists:
-            s, last_ord = state.get
-        else:
-            s, last_ord = 0.0, None
-        parts = [pdf for pdf in pdfs if len(pdf)]
-        if not parts:
+        s, last_ord = state.get if state.exists else (0.0, None)
+        rows = take(key, pdfs, late_ordinals(time_col, last_ord))
+        if rows is None:
             return
-        rows = (pd.concat(parts, ignore_index=True)
-                .sort_values(time_col, kind="mergesort"))
-        ords = rows[time_col].map(lambda d: d.toordinal())
-        bad = ords.duplicated(keep="first")
-        if last_ord is not None:
-            bad = bad | (ords <= last_ord)
-        if bool(bad.any()):
-            if on_out_of_order == "raise":
-                raise RuntimeError(
-                    f"stream_cusum_alarms: key {key} got "
-                    f"{int(bad.sum())} row(s) at or before the carried "
-                    f"state time (ordinal {last_ord}) or sharing a time "
-                    f"ordinal within the batch — per-key in-order "
-                    f"delivery violated; pass on_out_of_order='drop' "
-                    f"to discard")
-            rows = rows[~bad]
-            ords = ords[~bad]
-            if not len(rows):
-                return
-        t = float(rows["target"].iloc[0])
-        out_s = []
-        for x in rows[value_col]:
-            s = max(0.0, s + (float(x) - t - sl))
-            out_s.append(s)
-        out = rows.copy()
-        out["cusum"] = pd.Series(out_s, index=rows.index, dtype="float64")
-        out["alarm"] = out["cusum"] > th
-        state.update((float(s), int(ords.iloc[-1])))
-        yield out
+        rows, s = cusum_frame(rows, value_col, s, sl, th)
+        state.update((float(s), rows[time_col].iloc[-1].toordinal()))
+        yield rows
 
-    fields = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                       for f in joined.schema.fields)
     return map_stateful_stream(
         joined, [key_col], fn,
-        output_schema=f"{fields}, cusum double, alarm boolean",
+        output_schema=appended_schema(joined, "cusum double, alarm boolean"),
         state_schema="s double, last_ord bigint",
         output_mode="update",
     )

@@ -11,7 +11,8 @@ earliest-completion fold: processing events in event-time order, stage
 ``i−1``'s completion — exactly the batch ``min(time > t_{i-1})``
 because times only grow.  Equal-timestamp events are order-independent
 for the funnel (a stage never completes at a time equal to its
-predecessor's), so only strictly RETROGRADE rows violate the contract.
+predecessor's), so only strictly RETROGRADE rows violate the contract
+(policed by ``stateful.in_order_rows``).
 
 State is O(k) per key forever (k stage times + one ordinal)."""
 
@@ -42,14 +43,12 @@ def stream_funnel_progress(events: DataFrame, stages: list[str],
     """
     import pandas as pd
 
-    from hazelcast_jet_spark.streaming.stateful import map_stateful_stream
+    from hazelcast_jet_spark.streaming.stateful import (in_order_rows,
+                                                        map_stateful_stream)
 
     if len(stages) < 2:
         raise ValueError("funnel needs at least 2 stages")
-    if on_out_of_order not in ("raise", "drop"):
-        raise ValueError(
-            f"on_out_of_order must be 'raise' or 'drop', "
-            f"got {on_out_of_order!r}")
+    take = in_order_rows("stream_funnel_progress", time_col, on_out_of_order)
     k = len(stages)
     stage_of = {s: i for i, s in enumerate(stages)}
     bound_us = (None if within_seconds is None
@@ -58,28 +57,18 @@ def stream_funnel_progress(events: DataFrame, stages: list[str],
     feed = (events.select(key_col, type_col, time_col)
             .filter(F.col(type_col).isin(list(stages))))
 
+    def micros(rows):
+        return rows[time_col].map(lambda t: t.value // 1000)
+
     def fn(key, pdfs, state):
-        if state.exists:
-            st = list(state.get)
-        else:
-            st = [-1] * k + [-1]          # t0..t_{k-1}, last_us
-        parts = [pdf for pdf in pdfs if len(pdf)]
-        if not parts:
+        # t0..t_{k-1}, last_us
+        st = list(state.get) if state.exists else [-1] * (k + 1)
+        # only strictly retrograde rows are late (ties are legitimate)
+        rows = take(key, pdfs,
+                    lambda rows: None if st[-1] < 0 else micros(rows) < st[-1])
+        if rows is None:
             return
-        rows = (pd.concat(parts, ignore_index=True)
-                .sort_values(time_col, kind="mergesort"))
-        us = rows[time_col].map(lambda t: t.value // 1000)
-        if st[-1] >= 0 and bool((us < st[-1]).any()):
-            if on_out_of_order == "raise":
-                raise RuntimeError(
-                    f"stream_funnel_progress: key {key} got "
-                    f"{int((us < st[-1]).sum())} row(s) before the "
-                    f"carried state time — per-key in-order delivery "
-                    f"violated; pass on_out_of_order='drop' to discard")
-            keep = us >= st[-1]
-            rows, us = rows[keep], us[keep]
-            if not len(rows):
-                return
+        us = micros(rows)
         for t_us, typ in zip(us, rows[type_col]):
             i = stage_of[typ]
             if i == 0:
@@ -94,8 +83,7 @@ def stream_funnel_progress(events: DataFrame, stages: list[str],
             {key_col: [key[0]],
              "stage_reached": [sum(1 for v in st[:-1] if v >= 0)]})
 
-    key_type = dict(zip(feed.columns, feed.schema))[key_col] \
-        .dataType.simpleString()
+    key_type = feed.schema[key_col].dataType.simpleString()
     state_schema = (", ".join(f"t{i} bigint" for i in range(k))
                     + ", last_us bigint")
     return map_stateful_stream(

@@ -10,15 +10,25 @@ the batch filter row for row.  State is O(1) per key however long the
 stream runs (two doubles and an int — the smallest possible stateful
 footprint for an adaptive smoother).
 
-Correct under per-key in-order delivery across micro-batches (the
-:mod:`.transitions` contract, same policing): a batch delivering a row
-older than the carried state raises (or drops) rather than silently
-rewinding the filter.
+The steps are the batch loop (``timeseries.kalman_steps``) run from the
+carried posterior; late rows (:func:`late_ordinals`) raise or drop
+through ``stateful.in_order_rows`` rather than rewind the filter.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+
+def late_ordinals(time_col: str, last_ord: int | None):
+    """Late rows of the DATE-keyed twins: a day ordinal <= the carried
+    one or repeated within the batch, so a duplicate (key, day) is
+    rejected whether or not a trigger boundary splits the pair."""
+    def late(rows):
+        ords = rows[time_col].map(lambda d: d.toordinal())
+        bad = ords.duplicated(keep="first")
+        return bad if last_ord is None else bad | (ords <= last_ord)
+    return late
 
 
 def stream_kalman_level(series: DataFrame, key_col: str, time_col: str,
@@ -28,84 +38,36 @@ def stream_kalman_level(series: DataFrame, key_col: str, time_col: str,
     ``(key, time, value)`` rows (e.g. a daily-rollup CDC feed).
 
     Emits each input row extended with ``(level, gain)`` in update mode;
-    the emitted recurrence is operation-for-operation the batch
-    :func:`~hazelcast_jet_spark.operators.timeseries.kalman_level`
-    (same fixed-order double arithmetic), so bounded-input runs replay
-    the batch filter bit-for-bit regardless of micro-batch boundaries.
+    the emitted recurrence is the batch
+    :func:`~hazelcast_jet_spark.operators.timeseries.kalman_level`'s own
+    step loop, so bounded-input runs replay the batch filter bit-for-bit
+    regardless of micro-batch boundaries.
     ``time_col`` must be a DATE column; state keeps its ordinal.
 
-    Duplicate ``(key, time)`` rows are out of contract and are policed
-    UNIFORMLY whatever the batch boundaries (ADVICE r11): a duplicate
-    ordinal raises (or drops all but the first) whether it arrives in
-    the same micro-batch as its twin or a later one — previously a
-    same-batch duplicate slid through while a split one raised, so the
-    documented stream==batch equality silently depended on trigger
-    timing.
+    Duplicate ``(key, time)`` rows raise (or drop all but the first)
+    whatever the batch boundaries (:func:`late_ordinals`).
     """
-    import pandas as pd
+    from hazelcast_jet_spark.operators.timeseries import kalman_steps
+    from hazelcast_jet_spark.streaming.stateful import (
+        appended_schema, in_order_rows, map_stateful_stream)
 
-    from hazelcast_jet_spark.streaming.stateful import map_stateful_stream
-
-    if on_out_of_order not in ("raise", "drop"):
-        raise ValueError(
-            f"on_out_of_order must be 'raise' or 'drop', "
-            f"got {on_out_of_order!r}")
+    take = in_order_rows("stream_kalman_level", time_col, on_out_of_order)
     qf, rf = float(q), float(r)
 
     def fn(key, pdfs, state):
-        if state.exists:
-            x, p, last_ord = state.get
-        else:
-            x, p, last_ord = None, None, None
-        parts = [pdf for pdf in pdfs if len(pdf)]
-        if not parts:
+        x, p, last_ord = state.get if state.exists else (None, None, None)
+        rows = take(key, pdfs, late_ordinals(time_col, last_ord))
+        if rows is None:
             return
-        rows = (pd.concat(parts, ignore_index=True)
-                .sort_values(time_col, kind="mergesort"))
-        ords = rows[time_col].map(lambda d: d.toordinal())
-        # police duplicates within the batch AND against carried state
-        # with the same <= comparison, so a duplicate (key, time) row is
-        # rejected identically whether or not a trigger boundary splits
-        # it from its twin (ADVICE r11)
-        bad = ords.duplicated(keep="first")
-        if last_ord is not None:
-            bad = bad | (ords <= last_ord)
-        if bool(bad.any()):
-            if on_out_of_order == "raise":
-                raise RuntimeError(
-                    f"stream_kalman_level: key {key} got "
-                    f"{int(bad.sum())} row(s) at or before the "
-                    f"carried state time (ordinal {last_ord}) or "
-                    f"sharing a time ordinal within the batch — "
-                    f"per-key in-order delivery violated; pass "
-                    f"on_out_of_order='drop' to discard")
-            rows = rows[~bad]
-            ords = ords[~bad]
-            if not len(rows):
-                return
-        levels, gains = [], []
-        for v in rows[value_col]:
-            v = float(v)
-            if x is None:
-                x, p, k = v, rf, 1.0
-            else:
-                pp = p + qf
-                k = pp / (pp + rf)
-                x = x + k * (v - x)
-                p = (1.0 - k) * pp
-            levels.append(x)
-            gains.append(k)
-        out = rows.copy()
-        out["level"] = levels
-        out["gain"] = gains
-        state.update((float(x), float(p), int(ords.iloc[-1])))
-        yield out
+        rows["level"], rows["gain"], x, p = kalman_steps(
+            rows[value_col], qf, rf, x, p)
+        state.update((float(x), float(p),
+                      rows[time_col].iloc[-1].toordinal()))
+        yield rows
 
-    fields = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                       for f in series.schema.fields)
     return map_stateful_stream(
         series, [key_col], fn,
-        output_schema=f"{fields}, level double, gain double",
+        output_schema=appended_schema(series, "level double, gain double"),
         state_schema="x double, p double, last_ord bigint",
         output_mode="update",
     )

@@ -7,9 +7,11 @@ impl/processor/TransformStatefulP.java:48-151 (TTL at :56, eviction at
 
 Batch shape: ``applyInPandas`` — the whole key's history arrives as one
 pandas DataFrame (ordered by ``order_col`` when given), and the user fn
-folds it.  Streaming shape: ``applyInPandasWithState`` — per-key state
-object + ``GroupStateTimeout.EventTimeTimeout`` reproduces Jet's
-watermark-driven TTL eviction (onEvict ≡ the ``state.hasTimedOut`` branch).
+folds it; every keyed ordered scan of the engine runs on
+:func:`map_stateful_batch`.  Streaming shape: ``applyInPandasWithState``
+— per-key state object + ``GroupStateTimeout.EventTimeTimeout``
+reproduces Jet's watermark-driven TTL eviction (onEvict ≡ the
+``state.hasTimedOut`` branch).
 """
 
 from __future__ import annotations
@@ -17,63 +19,40 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+
+def _sorted(pdf, order):
+    return pdf.sort_values(order, kind="mergesort").reset_index(drop=True)
+
+
+def appended_schema(df: DataFrame, new_cols: str) -> str:
+    """DDL of ``df``'s columns followed by ``new_cols`` (DDL)."""
+    fields = ", ".join(f"{f.name} {f.dataType.simpleString()}"
+                       for f in df.schema.fields)
+    return f"{fields}, {new_cols}"
 
 
 def map_stateful_batch(df: DataFrame, keys: list, fn: Callable, schema,
-                       order_col: str | None = None) -> DataFrame:
-    """Keyed mapStateful on a bounded stage.
+                       order_col=None) -> DataFrame:
+    """Keyed map/filter/flatMapStateful on a bounded stage.
 
-    ``fn(pdf) -> pdf`` receives all rows of one key (sorted by
-    ``order_col``) — the batch analog of folding items through per-key
-    state in arrival order.
+    ``fn(pdf) -> pdf`` receives all rows of one key, stably sorted by
+    ``order_col`` (a column or a list) and positionally indexed — the
+    batch analog of folding items through per-key state in arrival
+    order.  ``keys == []`` is the global form (GeneralStage.java:156):
+    one group, deliberately non-parallel like Jet's.  A stream raises:
+    applyInPandas would reset the state every micro-batch.
     """
-    key_cols = [k if isinstance(k, str) else str(k) for k in keys]
+    if df.isStreaming:
+        raise ValueError(
+            "map_stateful_batch folds a bounded input; on a stream the "
+            "per-key state would reset every micro-batch — use "
+            "map_stateful_stream (applyInPandasWithState)")
 
     def run(pdf):
-        if order_col is not None:
-            pdf = pdf.sort_values(order_col)
-        return fn(pdf)
+        return fn(pdf if order_col is None else _sorted(pdf, order_col))
 
-    return df.groupBy(*[F.col(k) for k in key_cols]).applyInPandas(run, schema)
-
-
-def map_stateful_batch_global(df: DataFrame, fn: Callable, schema,
-                              order_col: str | None = None) -> DataFrame:
-    """Global mapStateful — GeneralStage.java:156: one state object, all
-    items through a single processor.  Single-group applyInPandas; like
-    Jet's GlobalMapStatefulTransform this is deliberately non-parallel."""
-    tagged = df.withColumn("__g", F.lit(1))
-
-    def run(pdf):
-        pdf = pdf.drop(columns="__g")
-        if order_col is not None:
-            pdf = pdf.sort_values(order_col)
-        return fn(pdf)
-
-    return tagged.groupBy("__g").applyInPandas(run, schema)
-
-
-def filter_stateful_batch(df: DataFrame, keys: list, pred_fn: Callable,
-                          order_col: str | None = None) -> DataFrame:
-    """Keyed filterStateful (GeneralStage.java:188; StreamStageWithKey
-    filterStateful): keep the rows a stateful predicate passes.
-
-    ``pred_fn(pdf) -> pdf-subset`` sees one key's rows in ``order_col``
-    order and returns the rows to KEEP (same columns) — e.g. "first
-    occurrence per key", "rows whose value exceeds the running max".
-    Output schema is the input schema by construction.
-    """
-    return map_stateful_batch(df, keys, pred_fn, df.schema, order_col)
-
-
-def flat_map_stateful_batch(df: DataFrame, keys: list, fn: Callable, schema,
-                            order_col: str | None = None) -> DataFrame:
-    """Keyed flatMapStateful (GeneralStage.java:226): 0..n output rows per
-    input row, driven by per-key state — same applyInPandas shape as
-    mapStateful but the output schema (and row count) is the caller's.
-    """
-    return map_stateful_batch(df, keys, fn, schema, order_col)
+    return df.groupBy(*keys).applyInPandas(run, schema)
 
 
 def map_stateful_stream(df: DataFrame, keys: list[str], fn: Callable,
@@ -96,3 +75,34 @@ def map_stateful_stream(df: DataFrame, keys: list[str], fn: Callable,
     return df.groupBy(*keys).applyInPandasWithState(
         fn, output_schema, state_schema, output_mode, timeout
     )
+
+
+def in_order_rows(op: str, order, on_out_of_order: str) -> Callable:
+    """Per-key in-order policing of the stream twins: validates
+    ``on_out_of_order`` and returns ``take(key, pdfs, late)``, which
+    stably sorts the micro-batch's rows on ``order``, raises on or drops
+    the rows of the mask ``late(rows)`` (``None``: none late), and
+    returns the rows left, or ``None``."""
+    if on_out_of_order not in ("raise", "drop"):
+        raise ValueError(
+            f"on_out_of_order must be 'raise' or 'drop', "
+            f"got {on_out_of_order!r}")
+
+    def take(key, pdfs, late: Callable):
+        import pandas as pd
+
+        parts = [pdf for pdf in pdfs if len(pdf)]
+        if not parts:
+            return None
+        rows = _sorted(pd.concat(parts, ignore_index=True), order)
+        bad = late(rows)
+        if bad is not None and bool(bad.any()):
+            if on_out_of_order == "raise":
+                raise RuntimeError(
+                    f"{op}: key {key} got {int(bad.sum())} late row(s) — "
+                    f"per-key in-order delivery violated; pass "
+                    f"on_out_of_order='drop' to discard")
+            rows = rows[~bad].reset_index(drop=True)
+        return rows if len(rows) else None
+
+    return take

@@ -11,8 +11,8 @@ State is O(1) per key however long the stream runs.
 Correct under per-key in-order delivery across micro-batches (the event
 journal / Kafka-partition ordering assumption; within a batch, rows are
 sorted).  A later batch delivering an EARLIER event for a key would
-stitch it after the carried one — same caveat as every
-record-at-a-time stateful operator, documented rather than hidden.
+stitch it after the carried one; ``stateful.in_order_rows`` polices
+that on ``(time, order id)``.
 """
 
 from __future__ import annotations
@@ -43,55 +43,42 @@ def stream_event_transitions(
     matrix.  ``"raise"`` (default) fails the batch loudly;
     ``"drop"`` discards the late rows and keeps counting.
     """
+    from collections import Counter
+
     import pandas as pd
 
-    from hazelcast_jet_spark.streaming.stateful import map_stateful_stream
+    from hazelcast_jet_spark.streaming.stateful import (in_order_rows,
+                                                        map_stateful_stream)
 
-    if on_out_of_order not in ("raise", "drop"):
-        raise ValueError(
-            f"on_out_of_order must be 'raise' or 'drop', "
-            f"got {on_out_of_order!r}")
+    take = in_order_rows("stream_event_transitions", [time_col, order_col],
+                         on_out_of_order)
 
     def fn(key, pdfs, state):
-        from collections import Counter
+        last_us, last_id, last_type = (state.get if state.exists
+                                       else (None, None, None))
 
-        if state.exists:
-            last_us, last_id, last_type = state.get
-        else:
-            last_us, last_id, last_type = None, None, None
-        parts = [p for p in pdfs if len(p)]
+        def late(rows):
+            # (time, id) lexicographically before the carried event
+            if last_us is None:
+                return None
+            us = rows[time_col].map(lambda t: int(pd.Timestamp(t).value // 1000))
+            return (us < last_us) | ((us == last_us) & (rows[order_col] < last_id))
+
+        rows = take(key, pdfs, late)
+        if rows is None:
+            return
         counts: Counter = Counter()
-        if parts:
-            rows = (pd.concat(parts, ignore_index=True)
-                    .sort_values([time_col, order_col]))
-            if last_us is not None:
-                us = rows[time_col].map(
-                    lambda t: int(pd.Timestamp(t).value // 1000))
-                late = (us < last_us) | (
-                    (us == last_us) & (rows[order_col] < last_id))
-                if bool(late.any()):
-                    if on_out_of_order == "raise":
-                        raise RuntimeError(
-                            f"stream_event_transitions: key {key} got "
-                            f"{int(late.sum())} event(s) older than the "
-                            f"carried state (last_us={last_us}, "
-                            f"last_id={last_id}) — per-key in-order "
-                            f"delivery violated (see operator contract); "
-                            f"pass on_out_of_order='drop' to discard")
-                    rows = rows[~late]
-                    if not len(rows):
-                        return
-            prev = last_type
-            for ty in rows[type_col].tolist():
-                if prev is not None:
-                    counts[(prev, ty)] += 1
-                prev = ty
-            tail = rows.iloc[-1]
-            state.update((
-                int(pd.Timestamp(tail[time_col]).value // 1000),
-                int(tail[order_col]),
-                str(tail[type_col]),
-            ))
+        prev = last_type
+        for ty in rows[type_col].tolist():
+            if prev is not None:
+                counts[(prev, ty)] += 1
+            prev = ty
+        tail = rows.iloc[-1]
+        state.update((
+            int(pd.Timestamp(tail[time_col]).value // 1000),
+            int(tail[order_col]),
+            str(tail[type_col]),
+        ))
         if counts:
             yield pd.DataFrame({
                 "from_type": [a for (a, _b) in counts],

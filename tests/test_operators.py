@@ -2177,6 +2177,28 @@ def test_bpe_fit_matches_reference(spark):
     assert len(got) == 12  # corpus is rich enough that nothing stalled
 
 
+def test_bpe_fit_frees_its_checkpoints(spark):
+    """Each merge round's ``localCheckpoint`` is freed once the next one
+    is materialized (``DataFrame.unpersist`` frees nothing there), so the
+    persisted RDDs left behind do not grow with ``n_merges``."""
+    from hazelcast_jet_spark.operators.bpe import bpe_fit
+
+    df = spark.createDataFrame(
+        [("low lower lowest newer newest wider widest",)] * 3
+        + [("new news newsy low slow slower",)] * 2, "text string")
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet()
+                   .toArray())
+
+    def left_behind(n_merges):
+        before = persisted()
+        assert len(bpe_fit(df, "text", n_merges=n_merges)) == n_merges
+        return len(persisted() - before)
+
+    assert left_behind(6) == left_behind(2) == 0
+
+
 def test_bpe_segments_paths_agree_and_match_reference(spark):
     from hazelcast_jet_spark.operators.bpe import (
         bpe_apply_pandas, bpe_fit, bpe_segments)

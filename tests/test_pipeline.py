@@ -231,6 +231,26 @@ def test_flat_map_stateful_batch_keyed(spark):
     assert got == [(1, -2), (1, 3)]
 
 
+def test_stateful_stages_reject_streaming_input(spark):
+    """The batch stateful stages fold a bounded input: on a stream,
+    applyInPandas per micro-batch would reset the per-key state every
+    batch, so all four raise and name the stream form instead."""
+    import pandas as pd
+
+    def same(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pdf
+
+    stage = Pipeline.create(spark).read_from(
+        spark.readStream.format("rate").load().selectExpr("value"))
+    keyed = stage.grouping_key("value")
+    for build in (lambda: keyed.map_stateful(same, "value long"),
+                  lambda: keyed.filter_stateful(same),
+                  lambda: keyed.flat_map_stateful(same, "value long"),
+                  lambda: stage.map_stateful_global(same, "value long")):
+        with pytest.raises(ValueError, match="map_stateful_stream"):
+            build()
+
+
 def test_global_aggregate_stage(spark):
     p = Pipeline.create(spark)
     out = (

@@ -310,6 +310,41 @@ def test_stream_kalman_rejects_same_batch_duplicate(spark, tmp_path):
     assert len(res) == 1 and res[0].level == 3.0
 
 
+def test_stream_kalman_equals_batch(spark, tmp_path):
+    """The carried-posterior streaming filter replays the batch
+    ``kalman_level`` bit-for-bit across three micro-batches (one file
+    per trigger), whatever the split of each key's series."""
+    import os
+
+    from hazelcast_jet_spark.operators.timeseries import kalman_level
+    from hazelcast_jet_spark.streaming.kalman import stream_kalman_level
+    from hazelcast_jet_spark.streaming.run import run_to_batch
+
+    daily = spark.createDataFrame(
+        [("a", f"2024-01-{d:02d}", v) for d, v in
+         enumerate([5, 9, 2, 7, 4, 8, 6, 3], start=1)]
+        + [("b", f"2024-01-{d:02d}", v) for d, v in
+           enumerate([11, 13, 12], start=3)],
+        "k string, day string, n bigint") \
+        .select("k", F.to_date("day").alias("day"), "n")
+    want = sorted((r.k, str(r.day), r.level, r.gain) for r in
+                  kalman_level(daily, "k", "day", "n", q=0.7, r=3.1)
+                  .collect())
+
+    src = str(tmp_path / "src"); os.makedirs(src)
+    for i, pred in enumerate([F.dayofmonth("day") <= 3,
+                              (F.dayofmonth("day") > 3)
+                              & (F.dayofmonth("day") <= 6),
+                              F.dayofmonth("day") > 6]):
+        daily.filter(pred).coalesce(1).write.parquet(f"{src}/f{i}")
+    stream = (spark.readStream.schema("k string, day date, n bigint")
+              .option("maxFilesPerTrigger", 1).parquet(src + "/f*"))
+    out = stream_kalman_level(stream, "k", "day", "n", q=0.7, r=3.1)
+    got = sorted((r.k, str(r.day), r.level, r.gain)
+                 for r in run_to_batch(out, "update").collect())
+    assert got == want and len(got) == 11
+
+
 def test_hindex_coreness_exact_on_known_graph(spark):
     from hazelcast_jet_spark.operators.graph import (hindex_coreness,
                                                      kcore_peel)
