@@ -962,9 +962,10 @@ def pairs_to_groups(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     # id) labeling (pytest-pinned equal to the distributed loop); above
     # the threshold, with NULL ids, or when the caller disables it, the
     # O(log d) distributed iteration below is unchanged.  Bound: the
-    # probe is ONE job collecting ≤ threshold+1 pairs (the directed edge
-    # list below is twice that, so this is the 2·threshold directed-edge
-    # bound), taken BEFORE anything is checkpointed.
+    # collect gathers ≤ threshold+1 pairs (the directed edge list below
+    # is twice that, so this is the 2·threshold directed-edge bound),
+    # BEFORE anything is checkpointed: no job when ``pairs`` is a bare
+    # local parquet scan, ONE job otherwise.
     tbl = bounded_arrow(e, _PAIRS_COLLECT_THRESHOLD)
     if tbl is not None and not (tbl.column("src").null_count
                                 or tbl.column("dst").null_count):

@@ -34,6 +34,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -224,9 +226,10 @@ def _replayed(edges: DataFrame, replay, ddl: str) -> DataFrame | None:
     wcc/pairs_to_groups r12 precedent): below the threshold the
     per-round checkpoint and aggregate jobs cost more in
     driver-synchronized scheduling than ONE bounded collect plus an
-    exact in-driver replay.  The probe (:func:`graph_local.
-    collect_int_edges`) is the only job; nothing is checkpointed before
-    it.  ``replay(src, dst)`` reruns the operator's rounds bit-identically
+    exact in-driver replay.  The collect (:func:`graph_local.
+    collect_int_edges`) fires no job for a bare local parquet scan and
+    one for any other frame; nothing is checkpointed before it.
+    ``replay(src, dst)`` reruns the operator's rounds bit-identically
     (operators/graph_local.py) and returns one array per ``ddl`` column,
     or None to decline.  Returns the local table, or None when the
     distributed loop must run."""
@@ -236,7 +239,7 @@ def _replayed(edges: DataFrame, replay, ddl: str) -> DataFrame | None:
         return None
     names = [c.split()[0] for c in ddl.split(",")]
     return edges.sparkSession.createDataFrame(
-        pd.DataFrame(dict(zip(names, cols))), ddl)
+        pa.table(dict(zip(names, cols))), ddl)
 
 
 def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
@@ -305,7 +308,7 @@ def _ranks(edges: DataFrame, seeds: DataFrame | None, iters: int,
     def _replay(src, dst):
         seed_ids = None
         if seeds is not None:
-            # the seed collect is bounded by the same probe as the edges
+            # the seed collect is bounded by the same collect as the edges
             if dict(seeds.dtypes).get("node") != "bigint":
                 return None
             tbl = graph_local.bounded_arrow(
@@ -877,6 +880,17 @@ def label_propagation(edges: DataFrame, iters: int = 2,
     return labels
 
 
+def _components(edges: DataFrame, tbl) -> DataFrame:
+    """wcc's small-path result: the union-find labeling of the (src,
+    dst) Arrow table ``tbl``, handed back as an Arrow table so the sink
+    reads it in the JVM."""
+    nodes, comps = graph_local.min_root_components(tbl)
+    return edges.sparkSession.createDataFrame(
+        pa.table({"node": pa.array(nodes, pa.int64()),
+                  "component": pa.array(comps, pa.int64())}),
+        "node long, component long")
+
+
 def wcc(edges: DataFrame, max_rounds: int = 50,
         rounds_out: list | None = None) -> DataFrame:
     """Weakly-connected components by large-star/small-star alternation
@@ -911,32 +925,38 @@ def wcc(edges: DataFrame, max_rounds: int = 50,
     cross-operator pin).  ``rounds_out`` receives the executed
     large+small round count (the confirming round included).
     """
-    e0 = (edges.select(F.col("src").cast("long").alias("src"),
-                       F.col("dst").cast("long").alias("dst"))
-          .filter(F.col("src") != F.col("dst")))
+    from hazelcast_jet_spark.operators.dedup import _PAIRS_COLLECT_THRESHOLD
+
     # Size-adaptive small path (the pairs_to_groups discipline, r12
     # optimization round): below the threshold the star-contraction loop
     # costs more in driver-synchronized jobs (2 keyed passes + probe per
     # round) than one bounded Arrow collect + union-find, which returns
-    # the IDENTICAL reachable-minimum labeling.  The probe reads the
+    # the IDENTICAL reachable-minimum labeling.  The collect reads the
     # edge rows as they come (union-find needs neither orientation nor
-    # dedup), so it is ONE job with no shuffle, and the threshold bounds
-    # those rows; the cast + self-loop filter leave no NULL endpoints.
-    # The result goes back as pandas, so the sink reads it in the JVM.
+    # dedup), and the threshold bounds those rows.  When ``edges`` is a
+    # bare local parquet scan of bigint endpoints, its raw rows are read
+    # on the driver with no job and the NULL and self-loop rows dropped
+    # there (``src != dst`` is NULL or false for exactly the rows the
+    # ``e0`` filter below drops); otherwise, and when the raw rows
+    # exceed the threshold, ``e0`` is probed in ONE job with no shuffle.
     # Skipped when the caller asks for ``rounds_out`` — that is a request
     # for the distributed contraction contract (tests pin its round
     # counts).
     if rounds_out is None:
-        from hazelcast_jet_spark.operators.dedup import (
-            _PAIRS_COLLECT_THRESHOLD)
-
+        dt = dict(edges.dtypes)
+        if dt.get("src") == "bigint" and dt.get("dst") == "bigint":
+            tbl = graph_local.driver_arrow(graph_local.src_dst(edges),
+                                           _PAIRS_COLLECT_THRESHOLD)
+            if isinstance(tbl, pa.Table):
+                return _components(edges, tbl.filter(
+                    pc.not_equal(tbl["src"], tbl["dst"])))
+    e0 = (edges.select(F.col("src").cast("long").alias("src"),
+                       F.col("dst").cast("long").alias("dst"))
+          .filter(F.col("src") != F.col("dst")))
+    if rounds_out is None:
         tbl = graph_local.bounded_arrow(e0, _PAIRS_COLLECT_THRESHOLD)
         if tbl is not None:
-            nodes_l, comps_l = graph_local.min_root_components(tbl)
-            return edges.sparkSession.createDataFrame(
-                pd.DataFrame({"node": nodes_l, "component": comps_l},
-                             dtype="int64"),
-                "node long, component long")
+            return _components(edges, tbl)
     # canonical child>parent orientation; dedup before iterating
     e = (e0.select(F.greatest("src", "dst").alias("src"),
                    F.least("src", "dst").alias("dst"))

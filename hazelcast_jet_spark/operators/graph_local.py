@@ -13,16 +13,21 @@ gate results (and their DuckDB oracles) are unchanged; the equality is
 pinned by tests/test_graph_small_path.py and the cross-path fixpoint
 pins in tests/test_graph_fixpoint.py.
 
-Scale safety: :func:`bounded_arrow` is the one bounded driver collect.
-It runs ONE job, ``df.limit(T+1).toArrow()``, with no ``count()`` and no
-checkpoint before it: at most T+1 rows (~16 B per edge) reach the driver.
-Callers consult :data:`GRAPH_COLLECT_THRESHOLD` (edges; the default 2M
-edges is ≈32 MB on the driver, comfortably inside default driver memory
-and ``spark.driver.maxResultSize``) through :func:`collect_int_edges`,
-and fall back to the distributed loop above it.  A declined probe costs
-that one job plus the checkpoint the distributed loop starts with — the
-probe takes the place of the ``count()`` the decision used to need.  A
-100 TB co-occurrence graph never takes this path.
+Scale safety: :func:`bounded_arrow` is the one bounded driver collect,
+with no ``count()`` and no checkpoint before it: at most T+1 rows (~16 B
+per edge) reach the driver.  A bare local parquet scan is read on the
+driver with pyarrow and fires no job (:func:`driver_arrow`: the footers
+give the exact row count before any row is read, the way Jet's file
+source reads a local file inside the processor that consumes it); any
+other frame costs ONE job, ``df.limit(T+1).toArrow()``.  Callers
+consult :data:`GRAPH_COLLECT_THRESHOLD` (edges; the default 2M edges is
+≈32 MB on the driver, comfortably inside default driver memory and
+``spark.driver.maxResultSize``) through :func:`collect_int_edges`, and
+fall back to the distributed loop above it.  A declined file-backed
+graph costs no job before the checkpoint the distributed loop starts
+with; a declined derived frame costs the probe job too — the probe takes
+the place of the ``count()`` the decision used to need.  A 100 TB
+co-occurrence graph never takes this path.
 
 Exactness notes (what "bit-identical" rests on):
 
@@ -47,8 +52,12 @@ Exactness notes (what "bit-identical" rests on):
 
 from __future__ import annotations
 
+import logging
 import os
+from contextlib import ExitStack
 from decimal import ROUND_HALF_UP, Decimal
+
+_log = logging.getLogger(__name__)
 
 GRAPH_COLLECT_THRESHOLD = int(os.environ.get(
     "SPARK_GRAFT_GRAPH_COLLECT_THRESHOLD", "2000000"))
@@ -76,16 +85,162 @@ _E18 = Decimal("1e-18")
 _SCALE = 10 ** 18
 
 
+#: :func:`driver_arrow`'s answer for a frame it cannot read exactly on
+#: the driver: the caller runs the Spark probe instead
+NOT_LOCAL = object()
+
+#: relation options that only choose the files or merge their schemas;
+#: any other option (a rebase mode, a field-id read, ...) may change
+#: what the rows contain
+_FILE_OPTIONS = frozenset({
+    "path", "paths", "mergeschema", "recursivefilelookup",
+    "pathglobfilter", "modifiedbefore", "modifiedafter"})
+
+
 def bounded_arrow(df, max_rows: int):
     """``df`` as an Arrow table, or ``None`` when it has more than
     ``max_rows`` rows (or ``max_rows`` <= 0, which disables the small
-    paths).  One job: ``limit(max_rows + 1)`` bounds what reaches the
-    driver, and one row more than the bound is how an oversized input
-    shows without a ``count()``."""
-    if max_rows <= 0:
-        return None
+    paths).  A bare local parquet scan is read on the driver with no job
+    (:func:`driver_arrow`).  Any other frame costs one job:
+    ``limit(max_rows + 1)`` bounds what reaches the driver, and one row
+    more than the bound is how an oversized input shows without a
+    ``count()``."""
+    tbl = driver_arrow(df, max_rows)
+    if tbl is not NOT_LOCAL:
+        return tbl
     tbl = df.limit(max_rows + 1).toArrow()
     return None if tbl.num_rows > max_rows else tbl
+
+
+def driver_arrow(df, max_rows: int):
+    """``df`` read on the driver with pyarrow, as the table
+    ``df.toArrow()`` gives (same column names and schema; rows in
+    ``inputFiles()`` order, the same multiset), or ``None`` when the
+    parquet footers count more than ``max_rows`` rows (no row is read)
+    or ``max_rows`` <= 0.  Returns :data:`NOT_LOCAL` unless the read is
+    exact: ``df``'s analyzed plan must be a local parquet scan with no
+    partition columns, no bucket spec, no metadata column and no option
+    beyond :data:`_FILE_OPTIONS`, under at most one ``Project`` of its
+    columns or renames of them; the session must not read parquet field
+    ids; every column must exist under its exact name in every file
+    with the Arrow type ``toArrow()`` gives, and that type must be an
+    integer, floating point, boolean, string, binary or decimal one
+    (temporal values can be rebased on read).  Anything pyarrow raises
+    also gives :data:`NOT_LOCAL`."""
+    if max_rows <= 0:
+        return None
+    try:
+        scan = _parquet_scan(df)
+        if scan is None:
+            return NOT_LOCAL
+        return _read_footed(df, *scan, max_rows)
+    except Exception:  # noqa: BLE001 - the Spark probe is always exact
+        _log.debug("driver read declined; running the Spark probe",
+                   exc_info=True)
+        return NOT_LOCAL
+
+
+def _parquet_scan(df):
+    """``(local file paths, file column per output column,
+    case-sensitive?)`` when ``df`` qualifies for :func:`driver_arrow`
+    by its plan and session, else None."""
+    from urllib.parse import unquote
+
+    from hazelcast_jet_spark.sources import local_path
+
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    if conf.parquetFieldIdReadEnabled():
+        return None
+    top = plan = df._jdf.queryExecution().analyzed()
+    if _kind(plan) == "Project":
+        plan = plan.child()
+    if _kind(plan) != "LogicalRelation" or plan.isStreaming():
+        return None
+    rel = plan.relation()
+    if (_kind(rel) != "HadoopFsRelation"
+            or _kind(rel.fileFormat()) != "ParquetFileFormat"
+            or rel.partitionSchema().size()
+            or rel.bucketSpec().isDefined()
+            or not {k.lower() for k in
+                    rel.options().keySet().mkString("\n").split("\n")
+                    if k} <= _FILE_OPTIONS):
+        return None
+    out = plan.output()
+    if out.size() != rel.schema().size():  # a metadata column
+        return None
+    names = {}
+    for i in range(out.size()):
+        a = out.apply(i)
+        names[a.exprId().id()] = a.name()
+    if top is plan:
+        cols = list(names.values())
+    else:
+        cols = []
+        items = top.projectList()
+        for i in range(items.size()):
+            e = items.apply(i)
+            if _kind(e) == "Alias":
+                e = e.child()
+            if _kind(e) != "AttributeReference":
+                return None
+            name = names.get(e.exprId().id())
+            if name is None:
+                return None
+            cols.append(name)
+    paths = []
+    for f in rel.inputFiles():
+        p = local_path(f)
+        if p is None:
+            return None
+        paths.append(unquote(p))
+    return paths, cols, conf.caseSensitiveAnalysis()
+
+
+def _kind(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def _read_footed(df, paths, cols, case_sensitive, max_rows):
+    """The read behind :func:`driver_arrow`, once the plan qualifies:
+    the footers' row counts first, then the column names and types,
+    then the rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    want = to_arrow_schema(
+        df.schema, prefers_large_types=(
+            df.sparkSession._jconf.arrowUseLargeVarTypes()))
+    exact = (pa.types.is_integer, pa.types.is_floating, pa.types.is_boolean,
+             pa.types.is_string, pa.types.is_large_string,
+             pa.types.is_binary, pa.types.is_large_binary,
+             pa.types.is_decimal)
+    if not all(any(f(t) for f in exact) for t in want.types):
+        return NOT_LOCAL
+    with ExitStack() as stack:
+        files, n = [], 0
+        for p in paths:
+            pf = stack.enter_context(pq.ParquetFile(p))
+            files.append(pf)
+            n += pf.metadata.num_rows
+            if n > max_rows:
+                return None
+        read = list(dict.fromkeys(cols))
+        parts = []
+        for pf in files:
+            have = pf.schema_arrow
+            for c, t in zip(cols, want.types):
+                # the one file column Spark resolves the name to, read by
+                # pyarrow under that exact name ('.' names a nested one)
+                same = [h for h in have.names if h == c or (
+                    not case_sensitive and h.lower() == c.lower())]
+                if same != [c] or "." in c or have.field(c).type != t:
+                    return NOT_LOCAL
+            # the cast only renames and sets nullability, as in toArrow()
+            parts.append(pf.read(columns=read, use_threads=False)
+                         .select(cols).rename_columns(want.names)
+                         .cast(want))
+    return pa.concat_tables(parts) if parts else want.empty_table()
 
 
 def collect_int_edges(e):
@@ -94,18 +249,25 @@ def collect_int_edges(e):
     path must not run: non-``bigint`` endpoint types (decided from the
     schema, before any job), no edges, more edges than
     :data:`GRAPH_COLLECT_THRESHOLD`, or NULL endpoints.
-    ``e`` need not be materialized: the probe is the only job, and a
-    caller checkpoints only after it declines."""
+    ``e`` need not be materialized: a caller checkpoints only after the
+    collect declines, and the collect fires at most one job (none for a
+    bare local parquet scan)."""
     dt = dict(e.dtypes)
     if dt.get("src") != "bigint" or dt.get("dst") != "bigint":
         return None
-    tbl = bounded_arrow(e.select("src", "dst"), GRAPH_COLLECT_THRESHOLD)
+    tbl = bounded_arrow(src_dst(e), GRAPH_COLLECT_THRESHOLD)
     if tbl is None or tbl.num_rows == 0:
         return None
     src, dst = tbl.column("src"), tbl.column("dst")
     if src.null_count or dst.null_count:
         return None
     return src.to_numpy(), dst.to_numpy()
+
+
+def src_dst(e):
+    """``e.select("src", "dst")``, or ``e`` itself when those are its
+    columns already: each ``select`` is one more analysis on the driver."""
+    return e if e.columns == ["src", "dst"] else e.select("src", "dst")
 
 
 def _pylist(col) -> list:

@@ -83,14 +83,9 @@ def _schema_key(spark: SparkSession, path, fmt: str,
     not cache."""
     if fmt not in _FOOTER_FORMATS or not isinstance(path, str):
         return None
-    local = path
-    if local.startswith("file:"):
-        local = local[len("file:"):]
-        if local.startswith("//"):   # file:///abs -> /abs
-            local = local[2:]
-    # a relative path resolves against the JVM's working directory,
-    # which need not be this process's; a glob is expanded by Hadoop
-    if not local.startswith("/") or any(c in local for c in "*?[{\\"):
+    local = local_path(path)
+    # a glob is expanded by Hadoop
+    if local is None or any(c in local for c in "*?[{\\"):
         return None
     files = _files_fingerprint(local)
     if files is None:
@@ -98,6 +93,18 @@ def _schema_key(spark: SparkSession, path, fmt: str,
     confs = spark._jsparkSession.sessionState().conf().getAllConfs().toString()
     opts = tuple(sorted((str(k), str(v)) for k, v in options.items()))
     return fmt, local, opts, confs, files
+
+
+def local_path(path: str) -> str | None:
+    """The absolute local path that ``path`` (a plain path or a
+    ``file:`` URI) names, or None for another file system or a relative
+    path: a relative path resolves against the JVM's working directory,
+    which need not be this process's.  URI escapes are kept."""
+    if path.startswith("file:"):
+        path = path[len("file:"):]
+        if path.startswith("//"):   # file:///abs -> /abs
+            path = path[2:]
+    return path if path.startswith("/") else None
 
 
 def _files_fingerprint(root: str) -> tuple | None:

@@ -267,21 +267,27 @@ def _jobs_fired(spark, fn, group):
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+@pytest.mark.parametrize("derive, jobs", [
+    pytest.param(lambda e: e, 0, id="scan"),
+    pytest.param(lambda e: e.filter("src >= 0"), 1, id="derived"),
+])
 @pytest.mark.parametrize("name", ["pagerank", "label_propagation", "wcc"])
-def test_small_path_is_one_job(spark, tmp_path, name):
-    """Building the small-path result fires exactly ONE job — the bounded
-    Arrow probe.  A returning ``count()`` or eager checkpoint before the
-    sink shows up here as a second job."""
+def test_small_path_job_count(spark, tmp_path, name, derive, jobs):
+    """Building the small-path result fires no job for a bare local
+    parquet scan, which the collect reads on the driver, and exactly ONE
+    for a derived frame — the bounded Arrow probe.  A returning
+    ``count()`` or eager checkpoint before the sink shows up here as one
+    job more."""
     from hazelcast_jet_spark.operators import graph
 
     path = str(tmp_path / "edges")
     spark.createDataFrame([(i, i + 1) for i in range(40)] + [(5, 20)],
                           "src long, dst long").write.parquet(path)
-    e = spark.read.parquet(path)
+    e = derive(spark.read.parquet(path))
     out = []
     n = _jobs_fired(spark, lambda: out.append(getattr(graph, name)(e)),
-                    f"small-path-jobs-{name}")
-    assert n == 1
+                    f"small-path-jobs-{name}-{jobs}")
+    assert n == jobs
     assert out[0].count() > 0
 
 
